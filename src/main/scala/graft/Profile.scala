@@ -1,31 +1,25 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Optimization-round measurement tool (guide §1): run named queries
-  * through the bench's noop-sink methodology with a stage-level listener,
-  * printing per-stage wall time, task count, shuffle read/write and spill —
-  * the "where does the time actually go" view the UI would give if it were
+  * through the bench's noop-sink methodology with a job- and stage-level
+  * listener, printing job count, in-job vs inter-job gap seconds, and
+  * per-stage wall time, task count, shuffle read/write and spill — the
+  * "where does the time actually go" view the UI would give if it were
   * enabled.
   *
-  * Usage: SPARK_GRAFT_CPUS=32 tools/run.sh graft.Profile <sfDir> q1,q2,...
+  * Usage: tools/run.sh graft.Profile <sfDir> q1,q2,...
   * Each query runs twice; the second (warm) run is the one profiled.
   */
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        graft.queries.Scratch.dir("profile_warehouse"))
-      .getOrCreate()
-    graft.core.Session.tune(spark)
+    val spark = graft.core.Session.local(appName = "graft-profile",
+      extra = Map("spark.sql.warehouse.dir" ->
+        graft.queries.Scratch.dir("profile_warehouse")))
     spark.sparkContext.setLogLevel("ERROR")
 
     case class St(name: String, submitted: Long) {
@@ -100,7 +94,7 @@ object Profile {
           // planning / fs / collect), grouped by job description so
           // repeated per-commit work shows up as one aggregate line
           val jsnap = stages.synchronized(jobs.toSeq.sortBy(_._1))
-          if (jsnap.nonEmpty && sys.env.contains("GRAFT_PROFILE_JOBS")) {
+          if (jsnap.nonEmpty) {
             // merged-interval union, not a per-job sum: the pipeline (and
             // every broadcast future) submits jobs CONCURRENTLY, where a
             // naive sum exceeds wall time and jobId-ordered "gaps" are

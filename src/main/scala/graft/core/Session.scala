@@ -1,8 +1,13 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
 
-/** Local SparkSession factory mirroring the reference's runtime confs.
+/** The one front door for graft sessions: every main and spec builds its
+  * session through [[local]] or adopts an externally built one through
+  * [[tune]], and both install graft's extensions through [[install]].
   *
   * The reference pins AQE + coalescePartitions + skewJoin on every job
   * (reference: resources/jobs/faers_pipeline.yml:17-19) and runs Spark 4.x
@@ -32,7 +37,20 @@ object Session {
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
   )
 
-  def local(cores: Int = Runtime.getRuntime.availableProcessors(),
+  /** Whole-plan extensions: the as-of join operator, its pushdown/pruning
+    * rules, and runtime source-key pruning for MERGE targets.
+    */
+  private val strategies: Seq[SparkStrategy] = Seq(graft.plans.AsOfJoinStrategy)
+  private val optimizerRules: Seq[Rule[LogicalPlan]] =
+    Seq(graft.plans.AsOfJoinOptimizations, graft.plans.MergeRuntimeFiltering)
+
+  /** Local parallelism of every graft main: `$SPARK_GRAFT_CPUS`, else all
+    * available processors.
+    */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim).filter(_.nonEmpty)
+    .map(_.toInt).getOrElse(Runtime.getRuntime.availableProcessors())
+
+  def local(cores: Int = cpus,
             appName: String = "graft",
             extra: Map[String, String] = Map.empty): SparkSession = {
     val b = SparkSession.builder()
@@ -44,23 +62,38 @@ object Session {
     (commonConfs ++ extra).foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
-    // MERGE targets get runtime source-key pruning (SQL-only surface, so
-    // no API entry point exists to self-register it the way asof() does)
-    graft.plans.MergeRuntimeFiltering.register(spark)
-    spark
+    install(spark)
   }
 
-  /** Apply common confs + register graft's native Catalyst functions on an
-    * externally-created session (driver-owned).
+  /** Apply common confs + install graft's extensions on a session built
+    * outside graft (e.g. by a job platform before our code runs).
     */
   def tune(spark: SparkSession): SparkSession = {
     commonConfs.foreach { case (k, v) => spark.conf.set(k, v) }
-    graft.functions.GraftFunctions.register(spark)
-    // whole-plan extensions ride experimental.* on live sessions (the
-    // extensions-class route needs to be present at session build)
-    graft.plans.AsOfJoin.register(spark)
-    graft.plans.MergeRuntimeFiltering.register(spark)
+    install(spark)
+  }
+
+  /** Idempotently install the native functions, strategies and optimizer
+    * rules on a live session. A session built outside graft has already
+    * read `spark.sql.extensions`, so the function registry and
+    * `experimental.*` are the public runtime routes.
+    */
+  def install(spark: SparkSession): SparkSession = synchronized {
+    val registry = spark.sessionState.functionRegistry
+    graft.functions.GraftFunctions.functions.foreach { case (ident, info, builder) =>
+      if (!registry.functionExists(ident))
+        registry.registerFunction(ident, info, builder)
+    }
+    val ex = spark.experimental
+    ex.extraStrategies ++= strategies.filterNot(ex.extraStrategies.contains)
+    ex.extraOptimizations ++= optimizerRules.filterNot(ex.extraOptimizations.contains)
     spark
+  }
+
+  /** The same extensions for the build-time `spark.sql.extensions` route. */
+  def inject(ext: SparkSessionExtensions): Unit = {
+    graft.functions.GraftFunctions.functions.foreach(ext.injectFunction)
+    strategies.foreach(s => ext.injectPlannerStrategy(_ => s))
+    optimizerRules.foreach(r => ext.injectOptimizerRule(_ => r))
   }
 }

@@ -209,40 +209,21 @@ object Pipeline {
   def runSilver(spark: SparkSession,
                 fixedClock: Option[java.time.Instant]): Unit =
     inParallel(Silver.all.toSeq) { case (table, transform) =>
-      timed(s"silver.$table") {
-        val latest = Transforms.readLatestPartition(spark, table)
-          .transform(graft.core.Spread.byKnownSize(spark,
-            tableSizeBytes(spark, s"bronze.$table")))
-        transform(latest, fixedClock)
-          .write.mode("overwrite").saveAsTable(s"silver.$table")
-      }
-    }
-
-  /** Per-substage stderr timing for optimization work — enabled by
-    * GRAFT_PIPELINE_TIMING=1, zero-cost otherwise.
-    */
-  private def timed[T](label: String)(f: => T): T =
-    if (!sys.env.contains("GRAFT_PIPELINE_TIMING")) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      // no stage prefix: runSilver uses this too, so labels carry their
-      // own stage ("silver.demographics", "dim_patient merge+write")
-      System.err.println(
-        f"[pipeline] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
+      val latest = Transforms.readLatestPartition(spark, table)
+        .transform(graft.core.Spread.byKnownSize(spark,
+          tableSizeBytes(spark, s"bronze.$table")))
+      transform(latest, fixedClock)
+        .write.mode("overwrite").saveAsTable(s"silver.$table")
     }
 
   def runGold(spark: SparkSession, scdClock: ScdClock,
               today: Option[java.sql.Date] = None): Unit = {
-    timed("dim_date write")(DimDate.create(spark, today = today)
-      .write.mode("overwrite").saveAsTable("gold.dim_date"))
-    timed("dim_date optimize")(
-      optimizeTable(spark, "gold.dim_date")) // dim_date.py:182-185
-    timed("dim_date analyze")(
-      spark.sql("ANALYZE TABLE gold.dim_date COMPUTE STATISTICS"))
+    DimDate.create(spark, today = today)
+      .write.mode("overwrite").saveAsTable("gold.dim_date")
+    optimizeTable(spark, "gold.dim_date") // dim_date.py:182-185
+    spark.sql("ANALYZE TABLE gold.dim_date COMPUTE STATISTICS")
 
-    timed("dims (pool)")(inParallel(Dims.specs) { spec =>
+    inParallel(Dims.specs) { spec =>
       val staged = spec.build(readSpread(spark, s"silver.${spec.sourceTable}"))
       val fq = s"gold.${spec.name}"
       if (useBucketedScd2(spark, spec.name))
@@ -264,16 +245,14 @@ object Pipeline {
           .transform(graft.core.Spread.packForWrite(spark,
             math.max(tableSizeBytes(spark, s"silver.${spec.sourceTable}"),
               tableSizeBytes(spark, fq))))
-        timed(s"${spec.name} merge+write")(
-          if (target.isEmpty)
-            merged.write.mode("overwrite").saveAsTable(fq)
-          else overwriteViaSwap(spark, merged, fq))
+        if (target.isEmpty)
+          merged.write.mode("overwrite").saveAsTable(fq)
+        else overwriteViaSwap(spark, merged, fq)
         // the reference's per-dim OPTIMIZE + ANALYZE (dim_patient.py:154-157)
-        timed(s"${spec.name} optimize")(optimizeTable(spark, fq))
-        timed(s"${spec.name} analyze")(
-          spark.sql(s"ANALYZE TABLE $fq COMPUTE STATISTICS"))
+        optimizeTable(spark, fq)
+        spark.sql(s"ANALYZE TABLE $fq COMPUTE STATISTICS")
       }
-    })
+    }
 
     // only the PROBE stream needs the parallelism repair — the other six
     // sides become broadcast builds (each already a parallel scan); the
@@ -286,11 +265,6 @@ object Pipeline {
       spark.table("silver.indications"),
       spark.table("silver.therapy_dates"), spark.table("silver.outcomes"),
       spark.table("silver.reports"), spark.table("gold.dim_date"))
-    // timing-only decomposition of the fact write (noop pass = compute
-    // cost alone); never runs outside GRAFT_PIPELINE_TIMING sessions
-    if (sys.env.contains("GRAFT_PIPELINE_TIMING"))
-      timed("fact compute (noop)")(
-        fact.write.format("noop").mode("overwrite").save())
     // keyed pack: one file per (date, country) leaf, so the per-leaf
     // OPTIMIZE below skips every rewrite (the scan spread above would
     // otherwise fan 32 writers × ~20 leaves into ~600 small files)
@@ -303,16 +277,14 @@ object Pipeline {
         tableSizeBytes(spark, "gold.fact_adverse_events")),
       Seq(org.apache.spark.sql.functions.col("fact_created_date"),
         org.apache.spark.sql.functions.col("reporter_country"))))
-    timed("fact write")(factArranged.write
+    factArranged.write
       .partitionBy("fact_created_date", "reporter_country")
       .mode("overwrite")
-      .saveAsTable("gold.fact_adverse_events"))
+      .saveAsTable("gold.fact_adverse_events")
     // fact OPTIMIZE + ANALYZE (fact_adverse_events.py:330-333); per-leaf
     // compaction since the table is partitioned
-    timed("fact optimize")(
-      optimizeTable(spark, "gold.fact_adverse_events"))
-    timed("fact analyze")(
-      spark.sql("ANALYZE TABLE gold.fact_adverse_events COMPUTE STATISTICS"))
+    optimizeTable(spark, "gold.fact_adverse_events")
+    spark.sql("ANALYZE TABLE gold.fact_adverse_events COMPUTE STATISTICS")
   }
 
   /** The reference's analytics job (`generate_adverse_events_analytics`,

@@ -1,17 +1,17 @@
 package graft.functions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.types.IntegerType
 
-/** Registration for graft's native Catalyst expressions.
+/** graft's native Catalyst expressions.
   *
   * Two paths to the same registry entry:
   *  - `spark.sql.extensions=graft.functions.GraftExtensions` at session
   *    build time (the idiomatic plugin route), or
-  *  - [[GraftFunctions.register]] on a live session (used by Session.tune
-  *    for driver-owned sessions that are created before our code runs).
+  *  - [[graft.core.Session.install]] on a live session (used by every
+  *    session graft builds or adopts).
   * Callers then use `call_function("graft_dot", a, b)` / SQL `graft_dot()`.
   */
 object GraftFunctions {
@@ -67,22 +67,12 @@ object GraftFunctions {
     case other => throw new IllegalArgumentException(
       s"$name must be an integer literal, got $other")
   }
-
-  def register(spark: SparkSession): Unit =
-    functions.foreach { case (ident, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
-    }
 }
 
-/** `spark.sql.extensions` entry point: native functions + the whole-plan
-  * extensions (as-of join strategy and its pushdown/pruning rules).
+/** `spark.sql.extensions` entry point: the same functions, strategies and
+  * optimizer rules [[graft.core.Session.install]] puts on a live session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftFunctions.functions.foreach { case (ident, info, builder) =>
-      ext.injectFunction((ident, info, builder))
-    }
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    ext.injectOptimizerRule(_ => graft.plans.AsOfJoinOptimizations)
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    graft.core.Session.inject(ext)
 }

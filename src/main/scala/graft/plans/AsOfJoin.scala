@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
   Ascending, Attribute, AttributeSet, Expression, GenericInternalRow,
@@ -505,18 +505,6 @@ object AsOfJoinOptimizations extends Rule[LogicalPlan] with PredicateHelper {
 
 object AsOfJoin {
 
-  /** Idempotently install the strategy + optimizer rules on a live session
-    * (the driver owns session construction, so `spark.sql.extensions` is
-    * not available to us — `experimental.*` is the public runtime route).
-    */
-  def register(spark: SparkSession): Unit = synchronized {
-    val ex = spark.experimental
-    if (!ex.extraStrategies.contains(AsOfJoinStrategy))
-      ex.extraStrategies = ex.extraStrategies :+ AsOfJoinStrategy
-    if (!ex.extraOptimizations.contains(AsOfJoinOptimizations))
-      ex.extraOptimizations = ex.extraOptimizations :+ AsOfJoinOptimizations
-  }
-
   /** Left-outer as-of join of `left` to `right`.
     *
     * @param on        equi-join key column names (present on both sides)
@@ -548,7 +536,7 @@ object AsOfJoin {
       direction: String = "backward",
       tolerance: Option[Long] = None): DataFrame = {
     val spark = left.sparkSession
-    register(spark)
+    graft.core.Session.install(spark)
     val dir = AsOfDirection.parse(direction)
     require(!(strict && dir == AsOfDirection.Nearest),
       "strict is not defined for direction=nearest")

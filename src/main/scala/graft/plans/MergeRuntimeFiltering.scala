@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{
   Attribute, DynamicPruningSubquery, EqualTo, Expression, PredicateHelper}
 import org.apache.spark.sql.catalyst.plans.{InnerLike, LeftOuter, RightOuter}
@@ -136,18 +135,4 @@ object MergeRuntimeFiltering extends Rule[LogicalPlan] with PredicateHelper {
 
   private def isDeterministic(plan: LogicalPlan): Boolean =
     !plan.exists(_.expressions.exists(!_.deterministic))
-
-  /** Install on a live session (the `experimental.*` route every
-    * whole-plan graft extension uses — see [[AsOfJoin.register]]).
-    */
-  def register(spark: SparkSession): Unit = synchronized {
-    // measurement escape hatch: GRAFT_NO_MERGE_RF=1 skips registration so
-    // a full-bench A/B can bound the global-rule tax (the rule itself
-    // fast-paths on one failed WriteDelta match per plan; the A/B proves
-    // that claim at bench granularity). Never set in driver runs.
-    if (sys.env.contains("GRAFT_NO_MERGE_RF")) return
-    val ex = spark.experimental
-    if (!ex.extraOptimizations.contains(MergeRuntimeFiltering))
-      ex.extraOptimizations = ex.extraOptimizations :+ MergeRuntimeFiltering
-  }
 }

@@ -54,7 +54,7 @@ object ScaleInvariants {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = graft.core.Session.cpus
     val spark = graft.core.Session.local(cpus, "graft-scale-invariants")
     import spark.implicits._
 

@@ -303,20 +303,4 @@ object TableLogFileIndex {
       options = Map("mergeSchema" -> "true"))(spark)
     GraftShim.ofRows(spark, LogicalRelation(rel))
   }
-
-  /** Same relation marked STREAMING — the per-micro-batch DataFrame a
-    * V1 streaming source's `getBatch` must return (a batch-marked plan
-    * is rejected by the streaming engine).
-    */
-  def streamingRelation(spark: SparkSession, index: TableLogFileIndex,
-                        dataSchema: StructType): DataFrame = {
-    val rel = HadoopFsRelation(
-      location = index,
-      partitionSchema = index.partitionSchema,
-      dataSchema = dataSchema,
-      bucketSpec = None,
-      fileFormat = new ParquetFileFormat,
-      options = Map("mergeSchema" -> "true"))(spark)
-    GraftShim.ofRows(spark, LogicalRelation(rel, isStreaming = true))
-  }
 }

@@ -2,16 +2,12 @@ package graft.sources
 
 import java.util
 
-import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.execution.streaming.{Offset, Source}
-import org.apache.spark.sql.execution.streaming.runtime.{LongOffset, SerializedOffset}
-import org.apache.spark.sql.sources.{DataSourceRegister, StreamSourceProvider}
+import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-
-import graft.core.TableLog
 
 /** TableLog as a STREAMING SOURCE — the Delta streaming-source role:
   * `readStream.format("graft.sources.TableLogStreamProvider")
@@ -19,19 +15,14 @@ import graft.core.TableLog
   * newly-added files as a micro-batch; add
   * `.option("readChangeFeed", "true")` for typed change rows instead.
   *
-  * This class is BOTH a DSv2 [[TableProvider]] and a V1
-  * [[StreamSourceProvider]]. Spark prefers the V2 face for streaming —
-  * the returned [[GraftTable]] advertises `MICRO_BATCH_READ`, so every
-  * query through this format name runs the DSv2
-  * [[GraftAppendMicroBatchStream]] / [[GraftCdcMicroBatchStream]]
-  * (admission control, `Trigger.AvailableNow` catch-up semantics, stock
-  * parquet partition readers — see [[GraftStreamPlanner]]). The V1
-  * `Source` below remains ONLY as the fallback Spark uses when the class
-  * is listed in `spark.sql.streaming.disabledV2MicroBatchReaders`, and it
-  * serves just the append tail — the change feed is V2-only, because the
-  * V1 contract cannot bound `maxVersionsPerTrigger` per batch under
-  * AvailableNow and needs a private-API doorway to return non-file-scan
-  * batches.
+  * This class is a DSv2 [[TableProvider]] only: the returned
+  * [[GraftTable]] advertises `MICRO_BATCH_READ`, so every query through
+  * this format name runs the DSv2 [[GraftAppendMicroBatchStream]] /
+  * [[GraftCdcMicroBatchStream]] (admission control,
+  * `Trigger.AvailableNow` catch-up semantics, stock parquet partition
+  * readers — see [[GraftStreamPlanner]]). There is no V1 `Source`: with
+  * the class listed in `spark.sql.streaming.disabledV2MicroBatchReaders`
+  * a query fails at start instead of taking a weaker path.
   *
   * Offsets are VERSION NUMBERS: the log is the single source of truth,
   * manifests are immutable once committed, and a batch is re-derivable
@@ -51,16 +42,9 @@ import graft.core.TableLog
   * happens — the log says what is new, which is the entire point of a
   * log-structured table format under a streaming reader at 100 TB.
   */
-class TableLogStreamProvider extends StreamSourceProvider
-  with DataSourceRegister with TableProvider {
+class TableLogStreamProvider extends DataSourceRegister with TableProvider {
 
   override def shortName(): String = "graft-tablelog"
-
-  private def dirOf(params: Map[String, String]): String =
-    params.getOrElse("path", throw new IllegalArgumentException(
-      "graft-tablelog source requires .option(\"path\", <table dir>)"))
-
-  // ---- DSv2 face (the one streaming queries actually take) ----
 
   private def tableFor(options: CaseInsensitiveStringMap): GraftTable =
     new GraftTable(SparkSession.active,
@@ -74,135 +58,4 @@ class TableLogStreamProvider extends StreamSourceProvider
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table =
     tableFor(new CaseInsensitiveStringMap(properties))
-
-  // ---- V1 fallback (append tail only) ----
-
-  override def sourceSchema(ctx: SQLContext, schema: Option[StructType],
-                            providerName: String,
-                            parameters: Map[String, String])
-      : (String, StructType) = {
-    val dir = dirOf(parameters)
-    val s = schema.getOrElse(
-      TableLog.read(ctx.sparkSession, dir).schema)
-    (s"graft-tablelog:$dir", s)
-  }
-
-  override def createSource(ctx: SQLContext, metadataPath: String,
-                            schema: Option[StructType], providerName: String,
-                            parameters: Map[String, String]): Source =
-    if (parameters.getOrElse("readChangeFeed", "false").toBoolean)
-      throw new UnsupportedOperationException(
-        "the change feed streams through the DSv2 micro-batch reader " +
-          "only; remove this class from " +
-          "spark.sql.streaming.disabledV2MicroBatchReaders")
-    else
-      new TableLogStreamSource(ctx.sparkSession, dirOf(parameters),
-        sourceSchema(ctx, schema, providerName, parameters)._2,
-        skipChangeCommits =
-          parameters.getOrElse("skipChangeCommits", "false").toBoolean,
-        maxVersionsPerTrigger =
-          parameters.get("maxVersionsPerTrigger").map(_.toInt))
-}
-
-class TableLogStreamSource(
-    spark: SparkSession,
-    dir: String,
-    override val schema: StructType,
-    skipChangeCommits: Boolean,
-    maxVersionsPerTrigger: Option[Int] = None) extends Source {
-
-  private def version(o: Offset): Long = o match {
-    case LongOffset(v)      => v
-    case s: SerializedOffset => s.json.trim.toLong
-    case other => throw new IllegalStateException(s"unexpected offset $other")
-  }
-
-  /** End offset of the last batch this instance served — the base for
-    * rate-limited advancement. On restart the engine re-delivers the
-    * checkpointed range through [[getBatch]] before asking for new
-    * offsets, which re-seeds this (the V1 recovery contract
-    * FileStreamSource relies on the same way); a FRESH query starts from
-    * zero, where capping is always safe because nothing is committed.
-    */
-  private var lastEnd: Option[Long] = None
-
-  /** Rate limit (`maxVersionsPerTrigger`, the Delta `maxFilesPerTrigger`
-    * role at version granularity): advance at most k versions past the
-    * last served batch, stepping only onto RETAINED manifests so a
-    * vacuumed prefix can never strand the cursor. Under a repeating
-    * trigger the cursor drains to the tip batch by batch. KNOWN V1
-    * LIMITATION (the reason the DSv2 face above is the default): under
-    * `Trigger.AvailableNow` the V1 contract snapshots this offset ONCE,
-    * so a rate-capped run processes one bounded window per invocation
-    * (checkpoint-consistent — rerun to continue); the DSv2 stream's
-    * [[org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow]]
-    * applies the cap per micro-batch while draining to the pinned tip.
-    */
-  override def getOffset: Option[Offset] = {
-    val vs = TableLog.versions(spark, dir)
-    vs.lastOption.map { tip =>
-      val capped = maxVersionsPerTrigger match {
-        case Some(k) =>
-          val from = lastEnd.getOrElse(0L)
-          vs.filter(_ > from).take(k).lastOption.getOrElse(from)
-        case None => tip
-      }
-      LongOffset(capped)
-    }
-  }
-
-  /** Files and dv lines of a version's manifest (empty below v1). */
-  private def snapshot(v: Long): (Set[String], Set[String]) =
-    if (v <= 0) (Set.empty, Set.empty)
-    else {
-      val lines = TableLog.manifestLines(spark, dir, v)
-      (lines.filterNot(_.startsWith("#")).toSet,
-        lines.filter(l => l.startsWith("#dvp=") || l.startsWith("#dveq="))
-          .toSet)
-    }
-
-  override def getBatch(start: Option[Offset], end: Offset): DataFrame = {
-    val sv = start.map(version).getOrElse(0L)
-    val ev = version(end)
-    lastEnd = Some(ev)
-    val (sFiles, sDv) = snapshot(sv)
-    val (eFiles, eDv) = snapshot(ev)
-    val removed = sFiles -- eFiles
-    val dvChanged = eDv != sDv
-    if ((removed.nonEmpty || dvChanged) && !skipChangeCommits)
-      throw new IllegalStateException(
-        s"table at $dir changed non-append between versions $sv and $ev " +
-          s"(${removed.size} files removed, dvChanged=$dvChanged); " +
-          "streaming reads require append-only commits, or set " +
-          ".option(\"skipChangeCommits\", \"true\") to emit only added files")
-    val added = (eFiles -- sFiles).toSeq.sorted
-    val lines = if (ev <= 0) Seq.empty else TableLog.manifestLines(spark, dir, ev)
-    val transforms = lines.filter(_.startsWith("#layout="))
-      .flatMap(l => PartTransform.parse(l.stripPrefix("#layout=")))
-    val hidden = transforms.map(_.dirCol).toSet
-    val partSchema =
-      if (added.nonEmpty && added.head.contains("/"))
-        TableLogFileIndex.inferPartitionSchema(added)
-      else new StructType()
-    // column mapping: the engine-facing `schema` is LOGICAL; files carry
-    // on-disk names — scan physical, project back below
-    val meta = TableLog.metaSchema(lines)
-    val logicalData = StructType(
-      schema.filterNot(f => partSchema.fieldNames.contains(f.name)))
-    val dataSchema = meta.map(TableLog.physicalSchema).getOrElse(logicalData)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val qd = fs.makeQualified(new org.apache.hadoop.fs.Path(dir)).toUri.getPath
-    val entries = added.map { rel =>
-      val st = fs.getFileStatus(new org.apache.hadoop.fs.Path(dir, rel))
-      (rel, st.getLen, st.getModificationTime)
-    }
-    val index = new TableLogFileIndex(spark, qd, entries, Map.empty, partSchema)
-    val df = TableLogFileIndex.streamingRelation(spark, index, dataSchema)
-    val unhidden = hidden.foldLeft(df)((d, c) => d.drop(c))
-    TableLog.toLogical(unhidden, meta,
-      passthrough = partSchema.fieldNames.toSeq.filterNot(hidden))
-  }
-
-  override def stop(): Unit = ()
 }

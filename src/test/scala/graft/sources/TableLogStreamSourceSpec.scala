@@ -112,4 +112,29 @@ class TableLogStreamSourceSpec extends SparkSpec {
     q.awaitTermination(60000)
     assert(total == 100 && pSum == 50)
   }
+
+  test("disabled V2 reader: the stream fails at start, naming the provider") {
+    val dir = freshDir()
+    TableLog.append(spark, dir, spark.range(0, 10).select($"id"))
+    val key = "spark.sql.streaming.disabledV2MicroBatchReaders"
+    spark.conf.set(key, provider)
+    var batches = 0
+    try {
+      val q = spark.readStream.format(provider).option("path", dir).load()
+        .writeStream
+        .foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) =>
+          batches += 1; ()
+        }
+        .option("checkpointLocation",
+          java.nio.file.Files.createTempDirectory("graft_tls_ck5").toString)
+        .trigger(Trigger.AvailableNow()).start()
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        q.awaitTermination(60000))
+      // no V1 fallback exists: nothing was delivered through another path
+      assert(e.getMessage.contains(provider) &&
+        e.getMessage.contains("does not support microbatch processing"),
+        e.getMessage)
+      assert(batches == 0)
+    } finally spark.conf.unset(key)
+  }
 }
