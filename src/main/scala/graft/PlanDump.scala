@@ -105,9 +105,9 @@ object PlanDump {
       }
     } else {
       val out = args.lift(1).getOrElse("PLANS.md")
-      // sf0.01 is below the SSJoin auto threshold — pin the prefix mode so
-      // the containment plan documents the at-scale formulation
-      spark.conf.set("spark.graft.ssjoin.join", "prefix")
+      // sf0.01 is below the SSJoin size threshold — zero it so the
+      // containment plan documents the at-scale (prefix) formulation
+      spark.conf.set("spark.graft.ssjoin.directMaxInputBytes", "0")
       val sb = new StringBuilder
       sb.append("# PLANS — formatted physical plans for headline queries\n\n")
       sb.append(s"Auto-generated by `graft.PlanDump` on `$sfDir`. One representative\n")

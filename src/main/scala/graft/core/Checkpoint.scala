@@ -18,7 +18,6 @@ import org.apache.spark.sql.DataFrame
 object Checkpoint {
 
   val DirConf = "spark.graft.checkpoint.dir"
-  val StorageConf = "spark.graft.checkpoint.storage"
 
   def apply(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
@@ -37,11 +36,11 @@ object Checkpoint {
         // deserialized default turned a 40 GB JVM into a GC storm
         // (surfaced by the sf10 escalation on q_lpa_copart). The read
         // cost is one deserialization per round, paid off the hot loop.
-        val level = org.apache.spark.storage.StorageLevel.fromString(
-          spark.conf.get(StorageConf, "MEMORY_AND_DISK_SER"))
         df match {
           case ds: org.apache.spark.sql.classic.Dataset[_] =>
-            ds.localCheckpoint(true, level).asInstanceOf[DataFrame]
+            ds.localCheckpoint(true,
+              org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+              .asInstanceOf[DataFrame]
           case _ => df.localCheckpoint()
         }
     }

@@ -15,10 +15,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * `Spread.bySize` pays one round-robin exchange of the (tiny) input to
   * restore parallelism, but ONLY when the listed input under the data dir
-  * is below `spark.graft.scan.spreadMaxInputBytes` (default 1 GiB) — a
-  * metadata-only file-listing check ([[InputSize]]), decided before any
-  * job runs. At 100 TB the inputs carry thousands of row groups, the scan
-  * parallelizes naturally, the threshold test fails, and the repartition
+  * is at most [[MaxInputBytes]] (1 GiB) — a metadata-only file-listing
+  * check ([[InputSize]]), decided before any job runs. At 100 TB the
+  * inputs carry thousands of row groups, the scan parallelizes
+  * naturally, the threshold test fails, and the repartition
   * is NEVER planned — so the at-scale plan is untouched (no extra
   * exchange of bulk data). Partition count follows the session's
   * `defaultParallelism` (= cores in local mode, executor slots on a
@@ -30,14 +30,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * stays on), and every caller is an order-independent computation
   * (integer-cent sums, exact percentiles, shingle sets) gated against the
   * DuckDB oracle.
-  *
-  * `spark.graft.scan.spread=off` disables the mechanism for A/B runs.
   */
 object Spread {
 
-  val EnabledConf = "spark.graft.scan.spread"
-  val MaxBytesConf = "spark.graft.scan.spreadMaxInputBytes"
-  val DefaultMaxBytes: Long = 1L << 30
+  val MaxInputBytes: Long = 1L << 30
 
   /** Repartition `df` to the session's default parallelism iff the named
     * tables under `dir` are (metadata-provably) small enough that the
@@ -80,10 +76,8 @@ object Spread {
     * spread, no path convention assumed.
     */
   def byKnownSize(s: SparkSession, inputBytes: Long)(df: DataFrame): DataFrame =
-    if (s.conf.get(EnabledConf, "auto") == "off" ||
-        inputBytes > s.conf.get(MaxBytesConf, DefaultMaxBytes.toString).toLong)
-      df
-    else df.repartition(s.sparkContext.defaultParallelism)
+    if (small(inputBytes)) df.repartition(s.sparkContext.defaultParallelism)
+    else df
 
   /** The WRITE-side counterpart of the scan spread, under the same
     * metadata gate: a small table about to be written lands as ONE file
@@ -97,21 +91,14 @@ object Spread {
   def packForWrite(s: SparkSession, inputBytes: Long,
                    keys: Seq[org.apache.spark.sql.Column] = Seq.empty)(
       df: DataFrame): DataFrame =
-    if (s.conf.get(EnabledConf, "auto") == "off" ||
-        inputBytes > s.conf.get(MaxBytesConf, DefaultMaxBytes.toString).toLong)
-      df
+    if (!small(inputBytes)) df
     else if (keys.isEmpty) df.repartition(1)
     else df.repartition(keys: _*)
 
+  private def small(inputBytes: Long): Boolean = inputBytes <= MaxInputBytes
+
   private def ifSmall(s: SparkSession, dir: String, tables: Seq[String])(
-      df: DataFrame)(f: DataFrame => DataFrame): DataFrame = {
-    if (s.conf.get(EnabledConf, "auto") == "off") df
-    else {
-      val maxBytes =
-        s.conf.get(MaxBytesConf, DefaultMaxBytes.toString).toLong
-      val bytes =
-        InputSize.bytes(s, dir, tables.map(t => s"$t.parquet"))
-      if (bytes > maxBytes) df else f(df)
-    }
-  }
+      df: DataFrame)(f: DataFrame => DataFrame): DataFrame =
+    if (small(InputSize.bytes(s, dir, tables.map(t => s"$t.parquet")))) f(df)
+    else df
 }

@@ -1697,8 +1697,8 @@ object TableLog {
   }
 
   /** Entries across the tip's POSITIONAL deletion-vector sidecars — the
-    * number the MoR read cap (`spark.graft.catalog.morMaxEntries`)
-    * tests. Counted distributed (parquet row counts, no driver
+    * number the MoR read cap (`GraftMorScan.MaxEntries`) tests.
+    * Counted distributed (parquet row counts, no driver
     * materialization); includes entries gone inert because a rewrite
     * replaced their target file — [[compactDeletes]] retires those.
     */

@@ -62,10 +62,7 @@ object Pipeline {
     */
   def optimizeTable(spark: SparkSession, table: String,
                     targetBytes: Long = 128L * 1024 * 1024): Unit = {
-    val location = spark.sql(s"DESCRIBE EXTENDED $table")
-      .filter(org.apache.spark.sql.functions.col("col_name") === "Location")
-      .select("data_type").collect().headOption.map(_.getString(0))
-    location.foreach { loc =>
+    tableLocation(spark, table).foreach { loc =>
       val p = new org.apache.hadoop.fs.Path(loc)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val partitioned = fs.exists(p) && fs.listStatus(p)
@@ -115,29 +112,22 @@ object Pipeline {
     spark.conf.get("spark.sql.warehouse.dir").stripSuffix("/") +
       s"/gold_scd2/$name"
 
-  /** The SCD2 merge dial, same shape as `spark.graft.neardup.join`:
-    * `spark.graft.scd2.merge` = `overwrite` (the reference's
-    * full-overwrite-via-swap — fine while a dim is table-scan sized),
-    * `bucketed` ([[Scd2.mergeBucketed]]'s partition-pruned merge), or
-    * `auto` (default): flip to bucketed once the dimension's on-disk
-    * size crosses `spark.graft.scd2.bucketedMinBytes` (256 MB default —
-    * past that, rewriting the whole dim for a delta-sized change is the
-    * 100 TB anti-pattern; below it, the swap is one small job and extra
-    * layout machinery buys nothing). STICKY: an already-bucketed dim
-    * stays bucketed regardless of conf, because flapping layouts would
-    * re-shuffle the dimension every flip.
+  /** The SCD2 merge pick, same shape as the dedup family's size dials:
+    * the reference's full-overwrite-via-swap (fine while a dim is
+    * table-scan sized) until the dimension's on-disk size crosses
+    * `spark.graft.scd2.bucketedMinBytes` (256 MB default — past that,
+    * rewriting the whole dim for a delta-sized change is the 100 TB
+    * anti-pattern; below it, the swap is one small job and extra layout
+    * machinery buys nothing), then [[Scd2.mergeBucketed]]'s
+    * partition-pruned merge. A threshold of 0 flips every non-empty dim,
+    * `Long.MaxValue` keeps all on overwrite. STICKY: an already-bucketed
+    * dim stays bucketed regardless of the threshold, because flapping
+    * layouts would re-shuffle the dimension every flip.
     */
-  private[faers] def useBucketedScd2(spark: SparkSession, name: String): Boolean = {
-    if (Scd2.isBucketedStore(spark, bucketedDimPath(spark, name))) return true
-    spark.conf.get("spark.graft.scd2.merge", "auto") match {
-      case "bucketed" => true
-      case "overwrite" => false
-      case _ =>
-        val thresh = spark.conf.get("spark.graft.scd2.bucketedMinBytes",
-          (256L * 1024 * 1024).toString).toLong
-        tableSizeBytes(spark, s"gold.$name") > thresh
-    }
-  }
+  private[faers] def useBucketedScd2(spark: SparkSession, name: String): Boolean =
+    Scd2.isBucketedStore(spark, bucketedDimPath(spark, name)) ||
+      tableSizeBytes(spark, s"gold.$name") > spark.conf.get(
+        "spark.graft.scd2.bucketedMinBytes", (256L << 20).toString).toLong
 
   /** Total on-disk bytes of the silver layer — the metadata gate for the
     * fact write's keyed pack (the fact derives from exactly these tables).
@@ -145,21 +135,22 @@ object Pipeline {
   private def silverBytes(spark: SparkSession): Long =
     Silver.all.keys.map(t => tableSizeBytes(spark, s"silver.$t")).sum
 
-  /** On-disk bytes of a catalog table (0 when absent) — the auto dial's
-    * size probe; pure filesystem metadata, no scan.
+  /** On-disk bytes of a catalog table (0 when absent) — the size dials'
+    * probe; pure filesystem metadata, no scan.
     */
   private def tableSizeBytes(spark: SparkSession, table: String): Long =
     if (!spark.catalog.tableExists(table)) 0L
-    else {
-      val loc = spark.sql(s"DESCRIBE EXTENDED $table")
-        .filter(org.apache.spark.sql.functions.col("col_name") === "Location")
-        .select("data_type").collect().headOption.map(_.getString(0))
-      loc.map { l =>
-        val p = new org.apache.hadoop.fs.Path(l)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
-      }.getOrElse(0L)
-    }
+    else tableLocation(spark, table).map { l =>
+      val p = new org.apache.hadoop.fs.Path(l)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
+    }.getOrElse(0L)
+
+  /** The catalog `Location` of a table, from `DESCRIBE EXTENDED`. */
+  private def tableLocation(spark: SparkSession, table: String): Option[String] =
+    spark.sql(s"DESCRIBE EXTENDED $table")
+      .filter(org.apache.spark.sql.functions.col("col_name") === "Location")
+      .select("data_type").collect().headOption.map(_.getString(0))
 
   /** Bucketed-path dim merge: migrate existing history into the bucketed
     * store on first flip (read + seed write, per the layout contract),

@@ -676,7 +676,7 @@ object Dedup {
     * possible divergence is a missed borderline pair, the trade every
     * production low-threshold dedup pipeline makes (this is the
     * candidate-generation role SCALE.md assigns to MinHash-LSH; the exact
-    * join stays available via `spark.graft.neardup.join = direct`).
+    * join stays available as [[ngramJaccardPairs]]).
     *
     * Scale: signature is one fused codegen'd projection per doc; the
     * candidate join moves (id, one-long key) rows sharded `numPerm` ways,

@@ -26,10 +26,6 @@ object Hashing {
   def md5LongSql(expr: String): String =
     s"CAST('0x' || substr(md5(CAST($expr AS VARCHAR)),1,15) AS BIGINT)"
 
-  /** DuckDB SQL fragment equivalent to [[md5LongSeeded]]. */
-  def md5LongSeededSql(seed: Int, expr: String): String =
-    md5LongSql(s"'$seed:' || $expr")
-
   /** Scale-path hash: whole-stage-codegen xxhash64 (not oracle-portable). */
   def fastLong(c: Column): Column = xxhash64(c)
 

@@ -32,12 +32,6 @@ object Similarity {
     */
   def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 
-  /** The HOF formulation `dot` replaces — kept for sessions without the
-    * graft function registry (identical results, interpreted eval).
-    */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
-
   def l2Norm(v: Column): Column = sqrt(dot(v, v))
 
   /** Cosine from precomputed norms. */

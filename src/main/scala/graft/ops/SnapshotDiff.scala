@@ -53,20 +53,4 @@ object SnapshotDiff {
       .select(keys.map(c =>
         coalesce(col(s"_o_$c"), col(s"_n_$c")).as(c)) :+ col("change_type"): _*)
   }
-
-  /** LOG-derived change feed over a TableLog version window — the Delta
-    * CDF twin of [[diff]]: where diff reconciles two full snapshots with
-    * one O(table) outer join, this reads each commit's OWN delta (added
-    * files, removed files, new dv/eq delete entries) and emits
-    * `_change_type` ∈ {insert, delete, update_preimage, update_postimage}
-    * + `_commit_version` rows at O(changed data) — including SQL
-    * UPDATE / MERGE INTO commits from the DSv2 row-level path, which a
-    * snapshot diff cannot attribute to a version. `keys` (business key)
-    * upgrades a delta commit's two sides to exact CDF classification;
-    * see [[graft.core.TableLog.changes]] for the full contract.
-    */
-  def changeFeed(spark: org.apache.spark.sql.SparkSession, dir: String,
-                 fromVersion: Long, toVersion: Long,
-                 keys: Seq[String] = Seq.empty): DataFrame =
-    graft.core.TableLog.changes(spark, dir, fromVersion, toVersion, keys)
 }

@@ -56,24 +56,18 @@ object GraphOps {
     *    renames). No broadcast anywhere; nothing data-sized ever
     *    concentrates on one machine.
     *
-    * `spark.graft.graph.join` picks: `broadcast` | `copartition` | `auto`
-    * (default). Auto is size-thresholded on the INPUT bytes under the data
-    * dir (a metadata-only file listing, available before any job runs):
-    * broadcast below `spark.graft.graph.broadcastMaxInputBytes` (default
+    * The pick is size-thresholded on the INPUT bytes under the data dir
+    * (a metadata-only file listing, available before any job runs):
+    * broadcast up to `spark.graft.graph.broadcastMaxInputBytes` (default
     * 2 GiB — node tables of a graph built from less input than that sit
-    * comfortably under executor memory), co-partition above. Spec-proven
+    * comfortably under executor memory), co-partition above; a threshold
+    * of 0 forces co-partition, `Long.MaxValue` broadcast. Spec-proven
     * result-equal in GraphOpsSpec; PlanSpec-style assertions pin the
     * absence of broadcast in co-partition plans.
     */
   private[queries] def copartitionMode(s: SparkSession, d: String): Boolean =
-    s.conf.get("spark.graft.graph.join", "auto") match {
-      case "broadcast" => false
-      case "copartition" => true
-      case _ =>
-        val thresh = s.conf.get("spark.graft.graph.broadcastMaxInputBytes",
-          (2L * 1024 * 1024 * 1024).toString).toLong
-        graphInputBytes(s, d) > thresh
-    }
+    graphInputBytes(s, d) > s.conf.get(
+      "spark.graft.graph.broadcastMaxInputBytes", (2L << 30).toString).toLong
 
   /** Total bytes of the tables the graph queries read under `d` —
     * metadata-only (file listing, no job).
@@ -324,18 +318,13 @@ object GraphOps {
     * duplicate (dst, label) rows the partial agg would compress) and a
     * hot dst lands entirely in one task (AQE skew-split covers joins,
     * not aggregations). Above the input-size threshold the two-exchange
-    * partial-agg round is the safe shape; both forms are the same
-    * logical computation (hash-gated identical results).
+    * partial-agg round is the safe shape (threshold
+    * `spark.graft.lpa.oneShuffleMaxInputBytes`, default 2 GiB); both forms
+    * are the same logical computation (hash-gated identical results).
     */
   private[queries] def lpaPartialAgg(s: SparkSession, d: String): Boolean =
-    s.conf.get("spark.graft.lpa.round", "auto") match {
-      case "one-shuffle" => false
-      case "partial-agg" => true
-      case _ =>
-        val thresh = s.conf.get("spark.graft.lpa.oneShuffleMaxInputBytes",
-          (2L * 1024 * 1024 * 1024).toString).toLong
-        graphInputBytes(s, d) > thresh
-    }
+    graphInputBytes(s, d) > s.conf.get(
+      "spark.graft.lpa.oneShuffleMaxInputBytes", (2L << 30).toString).toLong
 
   /** LPA over any canonical (u < v, distinct) edge list: community sizes,
     * largest first (label tie-break). Reusable + directly testable.

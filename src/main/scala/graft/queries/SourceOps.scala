@@ -1217,10 +1217,10 @@ object SourceOps {
     // at-scale escape hatch (surfaced by the sf10 escalation): these two
     // statements delete ~half the table — past the MoR read cap that
     // delete fraction calls for OPTIMIZE (full compact materializes the
-    // deletes and clears the vectors). Below the dial the MoR read path
+    // deletes and clears the vectors). Below the cap the MoR read path
     // stays exercised.
-    val cap = s.conf.get("spark.graft.catalog.morMaxEntries", "10000000").toLong
-    if (graft.core.TableLog.dvEntryCount(s, s"$wh/gold/ld") > cap / 2)
+    if (graft.core.TableLog.dvEntryCount(s, s"$wh/gold/ld") >
+        graft.sources.GraftMorScan.MaxEntries / 2)
       graft.core.TableLog.compact(s, s"$wh/gold/ld")
     s.sql(s"""
       SELECT l_returnflag, count(*) AS n,
@@ -1273,9 +1273,9 @@ object SourceOps {
     // at-scale escape hatch (surfaced by the sf10 escalation): past the
     // MoR read cap the playbook is OPTIMIZE — compact each partition
     // (materializes its deletes) then retire the now-inert sidecar
-    // entries. Below the dial the MoR read path stays exercised.
-    val cap = s.conf.get("spark.graft.catalog.morMaxEntries", "10000000").toLong
-    if (graft.core.TableLog.dvEntryCount(s, s"$wh/gold/lu") > cap / 2) {
+    // entries. Below the cap the MoR read path stays exercised.
+    if (graft.core.TableLog.dvEntryCount(s, s"$wh/gold/lu") >
+        graft.sources.GraftMorScan.MaxEntries / 2) {
       Seq("A", "N", "R", "X").foreach(v =>
         graft.core.TableLog.compactPartition(s, s"$wh/gold/lu",
           ("l_returnflag", v)))

@@ -76,13 +76,18 @@ private[sources] class SerializableHadoopConf(
   * reuse a single broadcast — and each EXECUTOR loads the (file → deleted
   * row indexes) map once per snapshot from the sidecar parquet
   * ([[MorDvCache]]), the Delta/Iceberg geometry. Both delete families are
-  * capped by `spark.graft.catalog.morMaxEntries` (default 10M — past
-  * that the table needs OPTIMIZE, and the error says so). The read-side
-  * cost is a row-based (non-vectorized) reader on MoR snapshots only —
-  * compaction retires the vectors and restores the vectorized fast path,
-  * the same trade Delta/Iceberg make.
+  * capped at [[MaxEntries]] (10M — past that the table needs OPTIMIZE,
+  * and the error says so). The read-side cost is a row-based
+  * (non-vectorized) reader on MoR snapshots only — compaction retires the
+  * vectors and restores the vectorized fast path, the same trade
+  * Delta/Iceberg make.
   */
 object GraftMorScan {
+
+  /** Merge-on-read cap: delete entries a snapshot may carry per family
+    * (deletion-vector rows, equality-delete keys) before reads refuse it.
+    */
+  val MaxEntries: Long = 10000000L
 
   /** A snapshot's delete state as shipped to executors: dv sidecar
     * ABSOLUTE (qualified) paths — the entries themselves load
@@ -159,8 +164,6 @@ object GraftMorScan {
   private[sources] def loadDeletes(spark: SparkSession, dir: String,
                                    lines: Seq[String],
                                    tableSchema: StructType): MorDeletes = {
-    val cap = spark.conf
-      .get("spark.graft.catalog.morMaxEntries", "10000000").toLong
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sessionState.newHadoopConf())
     val qualified = fs.makeQualified(new org.apache.hadoop.fs.Path(dir)).toString
@@ -176,8 +179,8 @@ object GraftMorScan {
         .parquet(dvs.toIndexedSeq: _*)
         .groupBy("_dv_file").count().collect()
       val n = perFile.map(_.getLong(1)).sum
-      require(n <= cap, s"snapshot at $dir carries $n deletion-vector " +
-        s"entries (> spark.graft.catalog.morMaxEntries=$cap); run " +
+      require(n <= MaxEntries, s"snapshot at $dir carries $n deletion-vector " +
+        s"entries (> the $MaxEntries merge-on-read cap); run " +
         "OPTIMIZE (TableLog.compact) to materialize the deletes first")
       touched = perFile.map(_.getString(0)).sorted
     }
@@ -194,8 +197,8 @@ object GraftMorScan {
       val df = spark.read.parquet(entries.map(e => s"$qualified/${e._1}"): _*)
         .select(typed: _*)
       val n = df.count()
-      require(n <= cap, s"snapshot at $dir carries $n equality-delete " +
-        s"keys (> spark.graft.catalog.morMaxEntries=$cap); run " +
+      require(n <= MaxEntries, s"snapshot at $dir carries $n equality-delete " +
+        s"keys (> the $MaxEntries merge-on-read cap); run " +
         "OPTIMIZE (TableLog.compact) to materialize the deletes first")
       val converters = df.schema.fields.map(f =>
         org.apache.spark.sql.catalyst.CatalystTypeConverters

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming surface — beyond reference parity (the reference
@@ -136,13 +136,4 @@ object Streaming {
     */
   def enrichStream(events: DataFrame, dim: DataFrame, key: String): DataFrame =
     events.join(broadcast(dim), Seq(key), "left")
-
-  /** Run a streaming DataFrame to a named in-memory sink until all
-    * currently-available input is processed (test/dev harness).
-    */
-  def runToMemory(df: DataFrame, name: String, mode: OutputMode): Unit = {
-    val q = df.writeStream.format("memory").queryName(name).outputMode(mode).start()
-    q.processAllAvailable()
-    q.stop()
-  }
 }

@@ -194,8 +194,11 @@ class PipelineSpec extends SparkSpec {
 
   test("scd2 dial: auto flips dims to the bucketed store by size, stays sticky") {
     import graft.core.Scd2
-    // default auto at test scale: tiny dims stay on the overwrite path
+    // default threshold at test scale: tiny dims stay on the overwrite path
     assert(!Pipeline.useBucketedScd2(spark, "dim_patient"))
+    spark.conf.set("spark.graft.scd2.bucketedMinBytes", Long.MaxValue.toString)
+    try assert(!Pipeline.useBucketedScd2(spark, "dim_patient"))
+    finally spark.conf.unset("spark.graft.scd2.bucketedMinBytes")
     // state here: gold.dim_patient holds epoch-1 (weight 70.5 current);
     // silver.demographics was rewritten by the second-epoch test above
     // (weight 72.0), so the bucketed runGold below must BOTH migrate the
@@ -221,9 +224,10 @@ class PipelineSpec extends SparkSpec {
         .as[(Double, Boolean)].collect().toSet
       assert(hist == Set((70.5, false), (72.0, true)), hist)
       assert(dim.count() == rowsBefore + 1)
-      // sticky: with the threshold back at the default, the store wins
-      spark.conf.unset("spark.graft.scd2.bucketedMinBytes")
+      // sticky: even with the threshold out of reach, the store wins
+      spark.conf.set("spark.graft.scd2.bucketedMinBytes", Long.MaxValue.toString)
       assert(Pipeline.useBucketedScd2(spark, "dim_patient"))
+      spark.conf.unset("spark.graft.scd2.bucketedMinBytes")
       // and a second bucketed merge keeps exactly one current row per key
       // with the merged values (the total row count follows the
       // same-day-rerun reference edge case — see Scd2Spec — not a

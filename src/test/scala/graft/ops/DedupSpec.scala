@@ -215,29 +215,22 @@ class DedupSpec extends SparkSpec {
     assert(l2.exceptAll(n2).isEmpty && n2.exceptAll(l2).isEmpty)
   }
 
-  test("neardup dial: conf forces modes; auto flips on input size") {
+  private def withConf(k: String, v: String)(f: => Unit): Unit = {
+    spark.conf.set(k, v)
+    try f finally spark.conf.unset(k)
+  }
+
+  test("neardup dial: flips on input size, both sides reachable") {
     import graft.queries.DedupOps.neardupScaleMode
     val sf = "/root/testdata/sf0.001"
-    def withConf(k: String, v: String)(f: => Unit): Unit = {
-      spark.conf.set(k, v)
-      try f finally spark.conf.unset(k)
-    }
-    withConf("spark.graft.neardup.join", "direct") {
-      assert(!neardupScaleMode(spark, sf))
-    }
-    withConf("spark.graft.neardup.join", "banded") {
-      assert(neardupScaleMode(spark, sf))
-    }
-    withConf("spark.graft.neardup.join", "lsh") {
-      assert(neardupScaleMode(spark, sf))
-    }
-    // auto: sf0.001's documents are far below the default 2 MiB threshold
+    val k = "spark.graft.neardup.directMaxInputBytes"
+    // sf0.001's documents are far below the default 2 MiB threshold
     assert(!neardupScaleMode(spark, sf))
     // ...and far above a 1 KB threshold — the sf1-sizes case the dial exists
-    // for: auto must pick the banded/LSH form without any conf pinning
-    withConf("spark.graft.neardup.directMaxInputBytes", "1024") {
-      assert(neardupScaleMode(spark, sf))
-    }
+    // for: the banded form is picked from the input size alone
+    withConf(k, "1024") { assert(neardupScaleMode(spark, sf)) }
+    withConf(k, "1") { assert(neardupScaleMode(spark, sf)) }
+    withConf(k, Long.MaxValue.toString) { assert(!neardupScaleMode(spark, sf)) }
   }
 
   test("ssjoin containment dial: auto flips to probing-prefix above the size threshold") {
@@ -247,22 +240,13 @@ class DedupSpec extends SparkSpec {
     // probing-prefix spec below), so the flip is a pure planner choice.
     import graft.queries.DedupOps.ssjoinPrefixMode
     val sf = "/root/testdata/sf0.001"
-    def withConf(k: String, v: String)(f: => Unit): Unit = {
-      spark.conf.set(k, v)
-      try f finally spark.conf.unset(k)
-    }
-    withConf("spark.graft.ssjoin.join", "direct") {
-      assert(!ssjoinPrefixMode(spark, sf))
-    }
-    withConf("spark.graft.ssjoin.join", "prefix") {
-      assert(ssjoinPrefixMode(spark, sf))
-    }
-    // auto: below the default 2 MiB threshold -> direct
+    val k = "spark.graft.ssjoin.directMaxInputBytes"
+    // below the default 2 MiB threshold -> direct
     assert(!ssjoinPrefixMode(spark, sf))
-    // auto at sf1-like sizes (threshold shrunk below the input) -> prefix
-    withConf("spark.graft.ssjoin.directMaxInputBytes", "1024") {
-      assert(ssjoinPrefixMode(spark, sf))
-    }
+    // sf1-like sizes (threshold shrunk below the input) -> prefix
+    withConf(k, "1024") { assert(ssjoinPrefixMode(spark, sf)) }
+    withConf(k, "1") { assert(ssjoinPrefixMode(spark, sf)) }
+    withConf(k, Long.MaxValue.toString) { assert(!ssjoinPrefixMode(spark, sf)) }
   }
 
   test("ed-join with exact-duplicate collapse equals the naive quadratic join") {

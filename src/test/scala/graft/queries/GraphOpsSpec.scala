@@ -89,13 +89,13 @@ class GraphOpsSpec extends SparkSpec {
       GraphOps.triangleCensus(edges, copart = false).collect().toSeq)
     assert(GraphOps.lpaCommunities(edges, copart = true).collect().toSeq ==
       GraphOps.lpaCommunities(edges, copart = false).collect().toSeq)
-    // pagerank end-to-end through the conf switch
+    // pagerank end-to-end through the size threshold (0 = co-partition)
     val sf = "/root/testdata/sf0.001"
     val base = GraphOps.pagerank(spark, sf).collect().toSeq
     try {
-      spark.conf.set("spark.graft.graph.join", "copartition")
+      spark.conf.set("spark.graft.graph.broadcastMaxInputBytes", "0")
       assert(GraphOps.pagerank(spark, sf).collect().toSeq == base)
-    } finally spark.conf.unset("spark.graft.graph.join")
+    } finally spark.conf.unset("spark.graft.graph.broadcastMaxInputBytes")
     // the at-scale plan shape: ONE un-checkpointed iteration step in
     // copartition mode must contain no broadcast anywhere — the exact
     // structure (rank/contrib/adjacency shipped to every executor) that
@@ -131,35 +131,32 @@ class GraphOpsSpec extends SparkSpec {
     assert(exchangesPA == 2, s"partial-agg LPA round shape drifted:\n$planPA")
   }
 
-  test("LPA round-shape dial: auto is size-thresholded, explicit wins") {
+  private def withConf(k: String, v: String)(f: => Unit): Unit = {
+    spark.conf.set(k, v)
+    try f finally spark.conf.unset(k)
+  }
+
+  test("LPA round-shape dial: size-thresholded, both sides reachable") {
     val sf = "/root/testdata/sf0.001"
+    val k = "spark.graft.lpa.oneShuffleMaxInputBytes"
     assert(!GraphOps.lpaPartialAgg(spark, sf)) // tiny input -> one-shuffle
-    try {
-      spark.conf.set("spark.graft.lpa.oneShuffleMaxInputBytes", "1")
+    withConf(k, "1") {
       assert(GraphOps.lpaPartialAgg(spark, sf)) // above threshold -> partial agg
-      spark.conf.set("spark.graft.lpa.round", "one-shuffle")
-      assert(!GraphOps.lpaPartialAgg(spark, sf)) // explicit beats auto
-      spark.conf.set("spark.graft.lpa.round", "partial-agg")
-      assert(GraphOps.lpaPartialAgg(spark, sf))
-    } finally {
-      spark.conf.unset("spark.graft.lpa.oneShuffleMaxInputBytes")
-      spark.conf.unset("spark.graft.lpa.round")
+    }
+    withConf(k, Long.MaxValue.toString) {
+      assert(!GraphOps.lpaPartialAgg(spark, sf))
     }
   }
 
   test("auto mode is size-thresholded on input bytes") {
     val sf = "/root/testdata/sf0.001"
+    val k = "spark.graft.graph.broadcastMaxInputBytes"
     // tiny input, default 2 GiB threshold -> broadcast
     assert(!GraphOps.copartitionMode(spark, sf))
-    try {
-      // force the threshold under the input size -> co-partition
-      spark.conf.set("spark.graft.graph.broadcastMaxInputBytes", "1")
-      assert(GraphOps.copartitionMode(spark, sf))
-      spark.conf.set("spark.graft.graph.join", "broadcast")
-      assert(!GraphOps.copartitionMode(spark, sf)) // explicit beats auto
-    } finally {
-      spark.conf.unset("spark.graft.graph.broadcastMaxInputBytes")
-      spark.conf.unset("spark.graft.graph.join")
+    // threshold under the input size -> co-partition
+    withConf(k, "1") { assert(GraphOps.copartitionMode(spark, sf)) }
+    withConf(k, Long.MaxValue.toString) {
+      assert(!GraphOps.copartitionMode(spark, sf))
     }
   }
 
