@@ -47,9 +47,10 @@ import org.apache.spark.sql.functions.{col, lit}
   *    transaction token per commit and skips re-delivered batches —
   *    `foreachBatch` + batchId gives end-to-end exactly-once appends.
   *  - **Partitioned tables**: `partitionBy` lays commits out hive-style
-  *    (`col=val/...`); [[read]] re-derives partition columns via basePath
-  *    and prunes files by path at the MANIFEST level — a pure metadata
-  *    operation, before Spark lists or opens anything.
+  *    (`col=val/...`); [[read]] re-derives partition columns from the
+  *    manifest's paths (Spark's basePath typing) and prunes files on the
+  *    query's partition predicates at the MANIFEST level — a pure
+  *    metadata operation, before Spark lists or opens anything.
   *  - **Copy-on-write DELETE / MERGE**: [[deleteWhere]] and [[upsert]]
   *    rewrite only the data files containing affected rows; everything
   *    else carries into the new version untouched.
@@ -61,8 +62,9 @@ import org.apache.spark.sql.functions.{col, lit}
   *    [[vacuum]] reclaims unreferenced sidecars.
   *  - **Data skipping**: `append(statsCol=...)` records per-file min/max
   *    in the manifest (`#stats=` lines, carried forward with their
-  *    files); `read(skip=(col,lo,hi))` drops files whose range cannot
-  *    match — no footer reads, no file listing, just the log.
+  *    files); a `read(...).where(...)` on that column drops files whose
+  *    range cannot match — no footer reads, no file listing, just the
+  *    log ([[graft.sources.TableLogFileIndex]]).
   *  - **OPTIMIZE**: [[compact]] rewrites the current snapshot into
   *    target-size files and commits a new manifest; old versions still
   *    reference the old files, so layout changes are themselves
@@ -422,17 +424,29 @@ object TableLog {
       // columns with complete statistics; absent entry = not provable
       intStats: Map[String, (Long, Long, Boolean)])
 
-  /** (absolute path, file length) -> footer. Staged files are immutable
-    * once a manifest references them; the length guards a
-    * delete-and-recreate at the same path.
+  /** Footers held by [[footerCache]]; past this the least recently used
+    * entry goes (a footer entry is a schema plus a few stats, ~KBs).
     */
-  private val footerCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), FooterMeta]()
+  private val FooterCacheMax = 10000
+
+  /** (absolute path, file length, modification time) -> footer, LRU-bounded
+    * at [[FooterCacheMax]]. Staged files are immutable once a manifest
+    * references them; length and mtime guard a delete-and-recreate (or a
+    * same-length overwrite) at the same path — footers are the only
+    * source of a snapshot's schema, so a stale one is a wrong schema.
+    */
+  private val footerCache = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[(String, Long, Long), FooterMeta](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(String, Long, Long), FooterMeta]): Boolean =
+        size > FooterCacheMax
+    })
 
   private def footerOf(spark: SparkSession, p: Path): FooterMeta = {
     val conf = spark.sessionState.newHadoopConf()
-    val len = p.getFileSystem(conf).getFileStatus(p).getLen
-    footerCache.computeIfAbsent((p.toString, len), _ => {
+    val st = p.getFileSystem(conf).getFileStatus(p)
+    val key = (p.toString, st.getLen, st.getModificationTime)
+    Option(footerCache.get(key)).getOrElse {
       import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
@@ -493,10 +507,12 @@ object TableLog {
             }
           }
         }
-        FooterMeta(schema, r.getRecordCount,
+        val meta = FooterMeta(schema, r.getRecordCount,
           perCol.collect { case (k, Some(v)) => k -> v }.toMap)
+        footerCache.put(key, meta)
+        meta
       } finally r.close()
-    })
+    }
   }
 
   /** Total rows across parquet files, from footers alone — no job. */
@@ -505,24 +521,27 @@ object TableLog {
 
   /** The merged Spark schema of `files` (table-relative under `dir`) from
     * their footers' writer-stamped catalyst schemas, [[lenientMerge]]d on
-    * the driver — the same widest-type result the old
-    * mergeSchema-job-then-lenientMerge dance produced, without the job.
-    * `strict` keeps the old no-`#schema=` contract: genuinely
-    * incompatible twins fail AT PLANNING with the CANNOT_MERGE_SCHEMAS
-    * marker instead of a confusing per-file cast error mid-read. None
-    * when any file lacks the writer stamp (foreign file: callers fall
-    * back to the distributed inference).
+    * the driver — the widest-type merge, planned without a Spark job.
+    * `strict` keeps the no-`#schema=` contract: genuinely incompatible
+    * twins fail AT PLANNING with the CANNOT_MERGE_SCHEMAS marker instead
+    * of a confusing per-file cast error mid-read. Every file a manifest
+    * or sidecar line lists is staged through Spark's parquet writer,
+    * which always stamps the schema, so a file without the stamp was not
+    * written by this format and fails the read, named.
     */
   private[graft] def footerMergedSchema(spark: SparkSession, dir: String,
                                         files: Seq[String], strict: Boolean)
-      : Option[org.apache.spark.sql.types.StructType] = {
-    val schemas = files.map(f =>
-      footerOf(spark, new Path(dir, f)).schema.getOrElse(return None))
-    if (schemas.isEmpty) None
-    else Some(lenientMerge(schemas,
+      : org.apache.spark.sql.types.StructType = {
+    val schemas = files.map { f =>
+      footerOf(spark, new Path(dir, f)).schema.getOrElse(
+        throw new IllegalStateException(s"$dir/$f has no Spark schema in " +
+          s"its parquet footer (key $SparkSchemaKey): not a file this " +
+          "table format wrote"))
+    }
+    lenientMerge(schemas,
       original = if (strict) Some(new org.apache.spark.SparkException(
         "[CANNOT_MERGE_SCHEMAS] incompatible file schemas under " +
-          s"$dir and no #schema= metadata to arbitrate")) else None))
+          s"$dir and no #schema= metadata to arbitrate")) else None)
   }
 
   /** Is `from` → `to` a LOSSLESS type widening the parquet readers can
@@ -609,28 +628,33 @@ object TableLog {
       df.select(cols: _*)
     }
 
-  /** mergeSchema-equivalent multi-file read that PLANS from footers when
-    * possible: declared schema via [[footerMergedSchema]] (no inference
-    * job), the distributed mergeSchema read only for foreign files.
+  /** Multi-file read planned from footers: the `declared` physical
+    * schema when given (required once a column was ever WIDENED —
+    * mixed-width files refuse to schema-merge), else the
+    * [[footerMergedSchema]] of one file per commit (no inference job).
     * basePath-derived hive partition columns append as usual.
     */
   private def readFiles(spark: SparkSession, dir: String, files: Seq[String],
-                        basePath: Option[String] = None): DataFrame = {
-    val r0 = spark.read.option("basePath", basePath.getOrElse(dir))
-    footerMergedSchema(spark, dir, commitReps(files), strict = true)
-      .fold(r0.option("mergeSchema", "true"))(r0.schema)
+                        basePath: Option[String] = None,
+                        declared: Option[org.apache.spark.sql.types.StructType] = None)
+      : DataFrame =
+    spark.read.option("basePath", basePath.getOrElse(dir))
+      .schema(declared.getOrElse(
+        footerMergedSchema(spark, dir, commitReps(files), strict = true)))
       .parquet(files.map(f => s"$dir/$f"): _*)
-  }
 
-  /** One representative file per COMMIT (filename commit-id prefix):
-    * schema can only change at commit granularity, so footer work scales
-    * with commits in the snapshot, not files.
+  /** One representative file per COMMIT: schema can only change at commit
+    * granularity, so footer work scales with commits, not files. A data
+    * file's commit is its filename's commit-id prefix; a change-data
+    * sidecar's (`_change_data/_commit_version=<v>/part-...`, where every
+    * basename starts `part`) is its `_commit_version=` directory.
     */
-  private def commitReps(files: Seq[String]): Seq[String] = {
-    val baseName = (f: String) => f.drop(f.lastIndexOf('/') + 1)
-    files.groupBy(f => baseName(f).takeWhile(_ != '-'))
-      .values.map(_.head).toSeq
-  }
+  private def commitReps(files: Seq[String]): Seq[String] =
+    files.groupBy { f =>
+      val segs = f.split('/')
+      segs.find(_.startsWith("_commit_version="))
+        .getOrElse(segs.last.takeWhile(_ != '-'))
+    }.values.map(_.head).toSeq
 
   /** Hive partition column names as the manifest's file paths spell
     * them (first file line is representative — commit layouts agree).
@@ -640,7 +664,7 @@ object TableLog {
       f.split('/').init.toSeq.filter(_.contains('=')).map(_.takeWhile(_ != '=')))
 
   /** Current logical data schema of the tip: the `#schema=` metadata when
-    * present, else the file-derived (mergeSchema) data schema.
+    * present, else the footer-merged data schema.
     */
   def logicalSchema(spark: SparkSession, dir: String)
       : org.apache.spark.sql.types.StructType = {
@@ -838,32 +862,35 @@ object TableLog {
     eligible.max
   }
 
-  /** Scan `files` with row lineage attached: `_dv_file` (manifest-relative
-    * source path) + `_dv_idx` (row index inside the file) via the parquet
-    * `_metadata` column — deterministic and join-safe, unlike
-    * `input_file_name()` which loses meaning after the first join.
+  /** Attach row lineage to a scan of `dir`'s files: `_dv_file`
+    * (manifest-relative source path) + `_dv_idx` (row index inside the
+    * file) via the parquet `_metadata` column — deterministic and
+    * join-safe, unlike `input_file_name()` which loses meaning after the
+    * first join.
     */
-  private def lineageScan(spark: SparkSession, dir: String,
-                          files: Seq[String],
-                          // declared PHYSICAL schema: required instead of
-                          // mergeSchema once a column was ever WIDENED
-                          // (mixed-width files refuse to schema-merge)
-                          declared: Option[org.apache.spark.sql.types.StructType] = None)
-      : DataFrame = {
+  private def withLineage(spark: SparkSession, dir: String,
+                          scan: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.substring_index
-    val qd = qualifiedDir(spark, dir)
-    val r0 = spark.read.option("basePath", dir)
-    // no declared schema: derive one from the files' own footers on the
-    // driver (same merge the mergeSchema inference job would run) so
-    // planning costs no job; distributed inference only for foreign files
-    val schema = declared.orElse(
-      footerMergedSchema(spark, dir, commitReps(files), strict = true))
-    schema.fold(r0.option("mergeSchema", "true"))(r0.schema)
-      .parquet(files.map(f => s"$dir/$f"): _*)
-      .withColumn("_dv_file",
-        substring_index(col("_metadata.file_path"), qd + "/", -1))
+    scan.withColumn("_dv_file", substring_index(col("_metadata.file_path"),
+        qualifiedDir(spark, dir) + "/", -1))
       .withColumn("_dv_idx", col("_metadata.row_index"))
   }
+
+  /** Rows of `files` as visible in the snapshot `lines` describe: its
+    * deletion vectors and equality deletes applied, projected to
+    * `logical` (see [[toLogical]]) with the `partCols` and the lineage
+    * columns `_dv_file` / `_dv_idx` passed through. The one scan every
+    * rewrite and change-feed path reads a file set through, so none of
+    * them resurrects a row the snapshot hides.
+    */
+  private def visibleRows(spark: SparkSession, dir: String,
+                          files: Seq[String], lines: Seq[String],
+                          logical: Option[org.apache.spark.sql.types.StructType],
+                          partCols: Seq[String]): DataFrame =
+    toLogical(applyEqDeletes(spark, dir,
+      applyDv(spark, dir, withLineage(spark, dir, readFiles(spark, dir, files,
+        declared = metaSchema(lines).map(physicalSchema))), dvFiles(lines)),
+      lines), logical, passthrough = partCols ++ Seq("_dv_file", "_dv_idx"))
 
   /** Drop rows listed in the snapshot's deletion vectors (merge-on-read):
     * an anti-join of the lineage-tagged scan against the union of the dv
@@ -1420,104 +1447,9 @@ object TableLog {
       freshStats = stats, op = "overwrite_partitions").get
   }
 
-  /** Snapshot read: the latest version, or a pinned one (time travel).
-    * An empty manifest (overwrite with zero rows) yields an empty frame
-    * only when the caller's schema is recoverable — callers keep at least
-    * one file per snapshot in practice (parquet writers always emit one).
-    */
-  def read(spark: SparkSession, dir: String,
-           version: Option[Long] = None,
-           partitionFilter: Seq[(String, String)] = Seq.empty,
-           skip: Option[(String, Long, Long)] = None,
-           // Delta TIMESTAMP AS OF: greatest version committed <= ts
-           asOfTimestamp: Option[Long] = None): DataFrame = {
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"no committed versions under $dir")
-    val v = version
-      .orElse(asOfTimestamp.map(versionAsOf(spark, dir, _)))
-      .getOrElse(vs.last)
-    require(vs.contains(v), s"version $v not in ${vs.mkString(",")} (vacuumed?)")
-    // manifest-level pruning, twice over — both pure metadata operations
-    // on the manifest, before Spark ever lists or opens a file:
-    //  * partitionFilter drops files by `col=val` PATH segment;
-    //  * skip=(col,lo,hi) drops files whose recorded min/max range
-    //    (stats collected at append time) cannot intersect [lo,hi]; files
-    //    without stats for that column are conservatively kept.
-    val lines = manifestLines(spark, dir, v)
-    val all = lines.filterNot(_.startsWith("#"))
-    val stats = fileStats(lines)
-    val afterPart = partitionFilter.foldLeft(all) { case (fs0, (c, value)) =>
-      fs0.filter(inPartition(_, c, value))
-    }
-    // `#stats=` lines are keyed by ON-DISK column names; accept the
-    // logical name post-rename
-    val skipL2p = metaSchema(lines).map(renameMap).getOrElse(Map.empty)
-    val files = skip.fold(afterPart) { case (c0, lo, hi) =>
-      val c = skipL2p.getOrElse(c0, c0)
-      afterPart.filter(f => stats.get(f).flatMap(_.get(c)) match {
-        case Some((mn, mx)) => mx >= lo && mn <= hi
-        case None => true
-      })
-    }
-    require(all.nonEmpty, s"version $v has an empty manifest")
-    // mergeSchema: additive schema evolution — a snapshot may span commits
-    // written before and after a column was added; rows from old files
-    // surface the new column as null (Delta's mergeSchema semantics).
-    // basePath re-derives hive-style partition columns from file paths.
-    val dvs = dvFiles(lines)
-    // when ALTER metadata exists, read with the DECLARED physical schema
-    // instead of mergeSchema: a widened column's int32-era and int64-era
-    // files cannot schema-merge, but every parquet reader can serve the
-    // declared wide type per file; hive partition columns still append
-    // via basePath inference, dropped physical columns are simply not
-    // requested, and added columns null-fill (same semantics as before)
-    val declared = metaSchema(lines).map(physicalSchema)
-    def scan(fl: Seq[String]) = { // fl: manifest-RELATIVE names
-      // dv-free tables take the plain scan — zero plan overhead; with dvs
-      // the lineage-tagged anti-join hides deleted rows (merge-on-read)
-      if (dvs.isEmpty) {
-        val r0 = spark.read.option("basePath", dir)
-        // footer-derived schema when no ALTER metadata declares one:
-        // planning stays job-free (see footerMergedSchema)
-        declared.orElse(
-            footerMergedSchema(spark, dir, commitReps(fl), strict = true))
-          .fold(r0.option("mergeSchema", "true"))(r0.schema)
-          .parquet(fl.map(f => s"$dir/$f"): _*)
-      } else applyDv(spark, dir, lineageScan(spark, dir, fl, declared), dvs)
-        .drop("_dv_file", "_dv_idx")
-    }
-    // a filter matching zero files is a legitimate empty partition/range,
-    // not an error: return an empty frame with the snapshot's schema —
-    // derived from ONE representative file per directory (mergeSchema
-    // over all N files would read every footer just to plan empty)
-    val out =
-      if (files.nonEmpty) scan(files)
-      else {
-        val reps = all.groupBy(f => f.take(f.lastIndexOf('/') + 1))
-          .values.map(_.head).toSeq
-        scan(reps)
-          .where(org.apache.spark.sql.functions.lit(false))
-      }
-    val eqApplied = applyEqDeletes(spark, dir, out, lines)
-    // hidden-partitioning layout columns stay hidden on this path too
-    val unhidden =
-      layoutTransforms(lines).foldLeft(eqApplied)((d, t) => d.drop(t.dirCol))
-    // column mapping: surface the logical schema (renames, drops, adds)
-    toLogical(unhidden, metaSchema(lines), passthrough = pathPartCols(all))
-  }
-
-  /** Snapshot read through [[graft.sources.TableLogFileIndex]] — the
-    * AUTO-pruning twin of [[read]]: no `skip=`/`partitionFilter=`
-    * arguments; Spark's planner hands the query's own WHERE conjuncts to
-    * the index, which answers partition pruning (hive path segments) and
-    * min/max data skipping (`#stats=` lines) from the manifest alone.
-    * Deletion vectors apply as in [[read]]. Prefer this entry point for
-    * analytical reads; [[read]] remains for callers that pin file subsets
-    * programmatically.
-    */
   /** Assemble the snapshot's manifest-backed [[graft.sources.TableLogFileIndex]]
     * + flat data schema + raw manifest lines — the planning state shared
-    * by [[table]] and the DSv2 catalog front door
+    * by [[read]] and the DSv2 catalog front door
     * ([[graft.sources.GraftCatalog]]).
     */
   private[graft] def snapshotIndex(spark: SparkSession, dir: String,
@@ -1550,62 +1482,48 @@ object TableLog {
       val st = statusOf.getOrElse(rel, fs.getFileStatus(new Path(dir, rel)))
       (rel, st.getLen, st.getModificationTime)
     }
-    val partSchema =
-      if (all.head.contains("/"))
-        graft.sources.TableLogFileIndex.inferPartitionSchema(all)
-      else new org.apache.spark.sql.types.StructType()
-    // data schema from one representative file per COMMIT (filename
-    // prefix), not per directory: schema can only change at commit
-    // granularity, and a days×bucket layout has hundreds of directories
-    // per commit — reading a footer for each was the dominant cost of
-    // opening a transform-partitioned table
-    val reps = commitReps(all)
-    // data schema from the representatives' FOOTERS, merged on the driver
+    // data schema from one representative file per COMMIT, not per
+    // directory: schema can only change at commit granularity, and a
+    // days×bucket layout has hundreds of directories per commit. Read
+    // from the representatives' FOOTERS and merged on the driver
     // ([[footerMergedSchema]]) — zero Spark jobs to open a table (footers
     // are cached per JVM, so re-resolving a table after a commit reads
-    // exactly the new commit's footer). The distributed mergeSchema
-    // inference remains only as the foreign-file fallback; its semantics
-    // (CANNOT_MERGE_SCHEMAS at planning on un-arbitrated twins, lenient
-    // widest-type merge when #schema= arbitrates) are preserved.
-    val mergedSchema = footerMergedSchema(spark, dir, reps,
-      strict = metaSchema(lines).isEmpty).getOrElse {
-      try spark.read.option("mergeSchema", "true")
-        .parquet(reps.map(f => s"$dir/$f"): _*).schema
-      catch {
-        case e: org.apache.spark.SparkException
-            if e.getMessage.contains("CANNOT_MERGE_SCHEMAS") ||
-              e.getMessage.contains("Failed merging schemas") =>
-          lenientMerge(reps.map(f => spark.read.parquet(s"$dir/$f").schema),
-            original = if (metaSchema(lines).isEmpty) Some(e) else None)
-      }
-    }
-    val dataSchema = org.apache.spark.sql.types.StructType(
-      mergedSchema.filterNot(f => partSchema.fieldNames.contains(f.name)))
-    val transforms = layoutTransforms(lines)
-    val index = new graft.sources.TableLogFileIndex(
-      spark, qd, entries, fileStats(lines), partSchema, transforms)
+    // exactly the new commit's footer). Un-arbitrated incompatible twins
+    // fail here with CANNOT_MERGE_SCHEMAS; with #schema= metadata the
+    // lenient widest-type merge stands and the declared schema wins.
+    val mergedSchema = footerMergedSchema(spark, dir, commitReps(all),
+      strict = metaSchema(lines).isEmpty)
+    val index = graft.sources.TableLogFileIndex(
+      spark, qd, entries, fileStats(lines), layoutTransforms(lines))
+    val dataSchema = org.apache.spark.sql.types.StructType(mergedSchema
+      .filterNot(f => index.partitionSchema.fieldNames.contains(f.name)))
     (index, dataSchema, lines)
   }
 
-  def table(spark: SparkSession, dir: String,
-            version: Option[Long] = None,
-            asOfTimestamp: Option[Long] = None): DataFrame = {
+  /** Snapshot read — the latest version, a pinned one (time travel), or
+    * the greatest version committed at or before `asOfTimestamp` (Delta
+    * TIMESTAMP AS OF) — through [[graft.sources.TableLogFileIndex]]:
+    * Spark's planner hands the query's own WHERE conjuncts to the index,
+    * which answers partition pruning (hive path segments, hidden-layout
+    * transforms) and min/max data skipping (`#stats=` lines) from the
+    * manifest alone, before a footer is opened. Deletion vectors and
+    * equality deletes apply through the file's row lineage; the result
+    * carries the snapshot's logical schema (renames, drops, adds) with
+    * hive partition columns appended. The same index backs the SQL
+    * catalog ([[graft.sources.GraftCatalog]]).
+    */
+  def read(spark: SparkSession, dir: String,
+           version: Option[Long] = None,
+           asOfTimestamp: Option[Long] = None): DataFrame = {
     val (index, dataSchema, lines) =
       snapshotIndex(spark, dir, version, asOfTimestamp)
-    val qd = qualifiedDir(spark, dir)
     val transforms = layoutTransforms(lines)
     val base = graft.sources.TableLogFileIndex.relation(spark, index, dataSchema)
     val dvs = dvFiles(lines)
     val withDv =
       if (dvs.isEmpty) base
-      else {
-        import org.apache.spark.sql.functions.substring_index
-        val tagged = base
-          .withColumn("_dv_file",
-            substring_index(col("_metadata.file_path"), qd + "/", -1))
-          .withColumn("_dv_idx", col("_metadata.row_index"))
-        applyDv(spark, dir, tagged, dvs).drop("_dv_file", "_dv_idx")
-      }
+      else applyDv(spark, dir, withLineage(spark, dir, base), dvs)
+        .drop("_dv_file", "_dv_idx")
     val withEq = applyEqDeletes(spark, dir, withDv, lines)
     // HIDDEN partitioning: the derived layout columns never reach users
     val unhidden = transforms.foldLeft(withEq)((d, t) => d.drop(t.dirCol))
@@ -1620,8 +1538,8 @@ object TableLog {
     * commit the new layout as a new version. Old data files stay for time
     * travel until vacuumed. `clusterBy` range-partitions + sorts the
     * rewrite so each output file owns a disjoint key range, and `statsCol`
-    * records fresh per-file min/max — together they make `read(skip=...)`
-    * prune at the filter's selectivity (Delta's OPTIMIZE ZORDER role;
+    * records fresh per-file min/max — together they make a filtered
+    * [[read]] prune at the filter's selectivity (Delta's OPTIMIZE ZORDER role;
     * for genuine two-dimensional clustering see
     * [[Maintenance.compact]]'s `zorderBy` with the `graft_zorder` key).
     * Returns (filesBefore, filesAfter, newVersion).
@@ -1677,18 +1595,17 @@ object TableLog {
     // the rewrite must reproduce the FULL hive layout, not just the
     // filtered column — partitioning by (market, et) and compacting on
     // et would otherwise flatten market out of the path and break every
-    // later partitionFilter on it. The affected files' own path segments
+    // later partition predicate on it. The affected files' own path segments
     // carry the complete ordered column list.
     val partCols = affected.head.split('/').init.map(_.split('=')(0)).toSeq
     // basePath re-derives the partition columns, partitionBy re-lays out.
-    // dv-applied: the partition rewrite materializes ITS deletes; dv
-    // lines stay (other partitions may still need them — the rewritten
-    // files' entries go inert with the rename).
+    // Read as visible (like [[compact]]): the partition rewrite
+    // materializes ITS deletes; dv and eq lines stay (other partitions
+    // may still need them — the rewritten files' dv entries go inert
+    // with the rename).
     val tipLines = manifestLines(spark, dir, tip)
-    val rows = applyDv(spark, dir,
-        lineageScan(spark, dir, affected.toSeq,
-          metaSchema(tipLines).map(physicalSchema)),
-        dvFiles(tipLines))
+    val rows = visibleRows(spark, dir, affected.toSeq, tipLines,
+        metaSchema(tipLines), partCols)
       .drop("_dv_file", "_dv_idx")
       .repartition(nFiles)
     val (v, fresh) = replaceFiles(spark, dir, affected, rows, partCols,
@@ -1805,17 +1722,12 @@ object TableLog {
                   partitionBy: Seq[String] = Seq.empty): (Long, Int) = {
     val tip = versions(spark, dir).last
     val lines = manifestLines(spark, dir, tip)
-    val dvs = dvFiles(lines)
     val all = lines.filterNot(_.startsWith("#"))
-    val lineageCols = pathPartCols(all) ++ Seq("_dv_file", "_dv_idx")
     // visible snapshot with row lineage: `_dv_file` (not input_file_name,
     // which loses meaning after the dv anti-join) names each row's file;
     // LOGICAL names, so the caller's predicate resolves post-rename
     def visible(fl: Seq[String]) =
-      toLogical(applyEqDeletes(spark, dir,
-        applyDv(spark, dir, lineageScan(spark, dir, fl,
-          metaSchema(lines).map(physicalSchema)), dvs), lines),
-        metaSchema(lines), passthrough = lineageCols)
+      visibleRows(spark, dir, fl, lines, metaSchema(lines), pathPartCols(all))
     val affected = visible(all).filter(cond)
       .select(col("_dv_file")).distinct()
       .collect().map(_.getString(0)).toSet
@@ -1892,11 +1804,8 @@ object TableLog {
     val lines = manifestLines(spark, dir, tip)
     val all = lines.filterNot(_.startsWith("#"))
     val snapFiles = all.toSet
-    val matches = toLogical(applyEqDeletes(spark, dir,
-      applyDv(spark, dir, lineageScan(spark, dir, all,
-        metaSchema(lines).map(physicalSchema)), dvFiles(lines)), lines),
-      metaSchema(lines),
-      passthrough = pathPartCols(all) ++ Seq("_dv_file", "_dv_idx"))
+    val matches = visibleRows(spark, dir, all, lines, metaSchema(lines),
+        pathPartCols(all))
       .filter(org.apache.spark.sql.functions.coalesce(
         cond, org.apache.spark.sql.functions.lit(false)))
       .select(col("_dv_file"), col("_dv_idx"))
@@ -1994,11 +1903,10 @@ object TableLog {
     val groups = eqLines(lines).groupBy(_._2)
     groups.foldLeft(df) { case (acc, (cols, entries)) =>
       val files = entries.map(_._1)
-      val r0 = spark.read
       // key sidecars are Spark-staged: schema from their footers, no
-      // inference job (plain read only for foreign files)
-      val keys = footerMergedSchema(spark, dir, files, strict = true)
-        .fold(r0)(r0.schema)
+      // inference job
+      val keys = spark.read
+        .schema(footerMergedSchema(spark, dir, files, strict = true))
         .parquet(files.map(f => s"$dir/$f"): _*)
       val cond = cols.map(c => acc(c) <=> keys(c)).reduce(_ && _)
       acc.join(keys, cond, "left_anti")
@@ -2015,17 +1923,12 @@ object TableLog {
     enforceConstraints(spark, dir, updates) // only NEW rows can violate
     val tip = versions(spark, dir).last
     val lines = manifestLines(spark, dir, tip)
-    val dvs = dvFiles(lines)
     val all = lines.filterNot(_.startsWith("#"))
-    val lineageCols = pathPartCols(all) ++ Seq("_dv_file", "_dv_idx")
     // lineage (`_dv_file` from parquet _metadata) instead of
     // input_file_name: survives the dv anti-join AND the key semi-join;
     // LOGICAL names, so `updates`' key columns resolve post-rename
     def visible(fl: Seq[String]) =
-      toLogical(applyEqDeletes(spark, dir,
-        applyDv(spark, dir, lineageScan(spark, dir, fl,
-          metaSchema(lines).map(physicalSchema)), dvs), lines),
-        metaSchema(lines), passthrough = lineageCols)
+      visibleRows(spark, dir, fl, lines, metaSchema(lines), pathPartCols(all))
     val affected = visible(all)
       .join(org.apache.spark.sql.functions.broadcast(
         updates.select(keyCols.map(col): _*).distinct()), keyCols, "left_semi")
@@ -2625,7 +2528,7 @@ object TableLog {
   }
 
   /** One scan for a group of INSERT-ONLY commits sharing a `#schema=`
-    * line: all their added files in a single mergeSchema read, each row
+    * line: all their added files in a single footer-planned read, each row
     * stamped with its commit's version through a broadcast file→version
     * join — O(1) plan nodes per schema era instead of one union branch
     * (and one DataSource resolution) per commit. Falls back to the
@@ -2672,17 +2575,14 @@ object TableLog {
     val prevFiles = prev.filterNot(_.startsWith("#"))
     val addedFiles = curFiles.filterNot(prevFiles.toSet)
     val removedFiles = prevFiles.filterNot(curFiles.toSet)
-    val prevDv = dvFiles(prev)
-    val newDvSidecars = dvFiles(cur).filterNot(prevDv.toSet)
+    val newDvSidecars = dvFiles(cur).filterNot(dvFiles(prev).toSet)
     val newEq = eqLines(cur).filterNot(eqLines(prev).toSet)
     val ms = metaSchema(cur)
     val partCols = pathPartCols(curFiles ++ prevFiles)
 
-    val curDv = dvFiles(cur)
-    val curEq = eqLines(cur)
     val post: Option[DataFrame] =
       if (addedFiles.isEmpty) None
-      else if (curDv.isEmpty && curEq.isEmpty)
+      else if (dvFiles(cur).isEmpty && eqLines(cur).isEmpty)
         // fast path (append-only tables): one footer-planned read, no
         // lineage columns, no join
         Some(toLogical(readFiles(spark, dir, addedFiles),
@@ -2694,22 +2594,14 @@ object TableLog {
         // pre-existing equality-delete key. Post-images are the added
         // files' rows AS VISIBLE at v (same dv/eq application as
         // [[read]]): a hidden row was never logically inserted.
-        Some(toLogical(applyEqDeletes(spark, dir,
-          applyDv(spark, dir, lineageScan(spark, dir, addedFiles,
-            ms.map(physicalSchema)), curDv),
-          cur), ms, passthrough = partCols)
-          // toLogical(None) is identity (never-altered tables): the
-          // lineage columns must still not leak into the feed schema
+        Some(visibleRows(spark, dir, addedFiles, cur, ms, partCols)
           .drop("_dv_file", "_dv_idx"))
 
     // pre (a): removed files' rows AS VISIBLE at v-1 (dv/eq applied —
     // rows already hidden were not logically present, so not "deleted")
     val preRewrite: Option[DataFrame] =
       if (removedFiles.isEmpty) None
-      else Some(toLogical(applyEqDeletes(spark, dir,
-        applyDv(spark, dir, lineageScan(spark, dir, removedFiles,
-          metaSchema(prev).map(physicalSchema)), prevDv),
-        prev), ms, passthrough = partCols)
+      else Some(visibleRows(spark, dir, removedFiles, prev, ms, partCols)
         .drop("_dv_file", "_dv_idx"))
 
     // pre (b): rows the commit's NEW dv entries hide — read ONLY the
@@ -2726,12 +2618,8 @@ object TableLog {
           .collect().map(_.getString(0)).toSeq
           .filter(prevFiles.toSet) // positions only bind to v-1 files
         if (touched.isEmpty) None
-        else Some(toLogical(applyEqDeletes(spark, dir,
-          applyDv(spark, dir, lineageScan(spark, dir, touched,
-            metaSchema(prev).map(physicalSchema)), prevDv),
-          prev)
-          .join(entries, Seq("_dv_file", "_dv_idx"), "left_semi"),
-          ms, passthrough = partCols)
+        else Some(visibleRows(spark, dir, touched, prev, ms, partCols)
+          .join(entries, Seq("_dv_file", "_dv_idx"), "left_semi")
           .drop("_dv_file", "_dv_idx"))
       }
 
@@ -2745,9 +2633,8 @@ object TableLog {
         val visible = read(spark, dir, Some(v - 1))
         val frames = newEq.groupBy(_._2).map { case (cols, entries) =>
           val efiles = entries.map(_._1)
-          val er0 = spark.read
-          val keyDf = footerMergedSchema(spark, dir, efiles, strict = true)
-            .fold(er0)(er0.schema)
+          val keyDf = spark.read
+            .schema(footerMergedSchema(spark, dir, efiles, strict = true))
             .parquet(efiles.map(f => s"$dir/$f"): _*)
           val cond = cols.map(c =>
             visible(p2l.getOrElse(c, c)) <=> keyDf(c)).reduce(_ && _)

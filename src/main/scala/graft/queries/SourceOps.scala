@@ -326,16 +326,15 @@ object SourceOps {
       |FROM v2 JOIN tip USING (l_returnflag)
       |ORDER BY l_returnflag""".stripMargin
 
-  /** The manifest-backed FileIndex (`TableLog.table`) hash-gated:
+  /** The manifest-backed FileIndex (`TableLog.read`) hash-gated:
     * lineitem lands in THREE commits of disjoint orderkey thirds (per-file
     * `#stats=` min/max recorded) partitioned by return flag, and the gate
     * queries it with a plain WHERE on BOTH the partition column and the
-    * stats column — no manual `skip`/`partitionFilter` arguments. Spark's
-    * planner hands those conjuncts to the custom FileIndex, which prunes
-    * partitions from hive path segments and files from manifest stats
-    * before any footer is opened (spec asserts the numFiles metric). The
-    * oracle recomputes from the raw table — hash equality proves
-    * automatic pruning is exactly lossless.
+    * stats column. Spark's planner hands those conjuncts to the custom
+    * FileIndex, which prunes partitions from hive path segments and files
+    * from manifest stats before any footer is opened (spec asserts the
+    * numFiles metric). The oracle recomputes from the raw table — hash
+    * equality proves automatic pruning is exactly lossless.
     *
     * SCALE: planning cost is manifest-resident (no object-store listing),
     * and a selective predicate reads only matching files' bytes — the
@@ -356,7 +355,7 @@ object SourceOps {
       li.filter(col("l_orderkey") >= i * third &&
         col("l_orderkey") < (i + 1) * third),
       partitionBy = Seq("l_returnflag"), statsCol = Some("l_orderkey")))
-    graft.core.TableLog.table(s, dir)
+    graft.core.TableLog.read(s, dir)
       .filter(col("l_returnflag") === "A" && col("l_orderkey") <= third)
       .groupBy(col("l_linestatus"))
       .agg(count(lit(1)).as("n"), sum(col("l_quantity")).as("qty"),
@@ -409,7 +408,7 @@ object SourceOps {
       transforms = Seq(graft.sources.DaysOf("ts"),
         graft.sources.BucketOf(4, "user_id")),
       optimizeWrite = true)
-    graft.core.TableLog.table(s, dir)
+    graft.core.TableLog.read(s, dir)
       .filter(col("ts") >= lit("2024-01-08 00:00:00").cast("timestamp") &&
         col("ts") < lit("2024-01-15 00:00:00").cast("timestamp"))
       .groupBy(col("event_type"))
@@ -605,8 +604,8 @@ object SourceOps {
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
     (0 to 1).foreach(i => graft.core.TableLog.append(s, dir,
       o.filter(col("o_orderkey") % 2 === i), partitionBy = Seq("o_orderstatus")))
-    graft.core.TableLog.read(s, dir,
-        partitionFilter = Seq("o_orderstatus" -> "F"))
+    graft.core.TableLog.read(s, dir)
+      .where(col("o_orderstatus") === "F")
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n_orders"),
         Num.moneySum(col("o_totalprice")).as("revenue"))
@@ -681,8 +680,8 @@ object SourceOps {
       statsCol = Some("o_orderkey")))
     val lo = slice + 1
     val hi = 3 * slice - 2
-    graft.core.TableLog.read(s, dir, skip = Some(("o_orderkey", lo, hi)))
-      .filter(col("o_orderkey").between(lo, hi))
+    graft.core.TableLog.read(s, dir)
+      .where(col("o_orderkey").between(lo, hi))
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n_orders"),
         Num.moneySum(col("o_totalprice")).as("revenue"))

@@ -133,10 +133,8 @@ private[sources] object GraftStreamPlanner {
            constants: Map[String, Any],
            options: CaseInsensitiveStringMap): Seq[InputPartition] = {
     if (entries.isEmpty) return Seq.empty
-    val rels = entries.map(_._1)
-    val partSchema =
-      if (rels.head.contains("/")) TableLogFileIndex.inferPartitionSchema(rels)
-      else new StructType()
+    val idx = TableLogFileIndex(spark, baseDir, entries)
+    val partSchema = idx.partitionSchema
     val l2p = metaOpt.map(TableLog.renameMap).getOrElse(Map.empty)
     val physData = metaOpt.map(TableLog.physicalSchema)
       .orElse(fileSchema)
@@ -144,7 +142,6 @@ private[sources] object GraftStreamPlanner {
         constants.contains(f.name) ||
           partSchema.fieldNames.contains(f.name))))
     val physVisible = StructType(physData.fields ++ partSchema.fields)
-    val idx = new TableLogFileIndex(spark, baseDir, entries, Map.empty, partSchema)
     val snapIdx = new TableLogSnapshotIndex(spark, idx, entries, baseDir)
     val builder = ParquetScanBuilder(spark, snapIdx, physVisible, physData, options)
     // prune the inner scan to exactly the physical columns the output
@@ -366,8 +363,7 @@ private[sources] class GraftCdcMicroBatchStream(
     // sidecar/spool files are Spark-written in ONE write per version dir:
     // schema from their footers (driver metadata), not an inference job
     val fileSchema = TableLog.footerMergedSchema(spark, base,
-        parts.map(_._1), strict = true)
-      .getOrElse(spark.read.parquet(base).schema)
+      parts.map(_._1), strict = true)
     GraftStreamPlanner.plan(spark, qd, parts, None, Some(fileSchema), out,
       Map("_commit_version" -> v), options)
   }

@@ -42,7 +42,7 @@ private[sources] class SerializableHadoopConf(
 }
 
 /** Merge-on-read through the DSv2 front door: the scan-level twin of the
-  * anti-joins `TableLog.table` composes (reference surface:
+  * anti-joins `TableLog.read` composes (reference surface:
   * `spark.table(...)` everywhere, /root/reference/src/utils/
   * silver_transformations.py:43 — a user must not lose SQL access to a
   * table the moment someone runs a GDPR delete on it).

@@ -9,12 +9,12 @@ import org.apache.spark.sql.catalyst.expressions.{
   Literal, Or}
 import org.apache.spark.sql.execution.datasources.{
   FileIndex, FileStatusWithMetadata, HadoopFsRelation, LogicalRelation,
-  PartitionDirectory}
+  PartitionDirectory, PartitionSpec, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.graftshim.GraftShim
 import org.apache.spark.sql.types.{
   ByteType, DateType, IntegerType, LongType, ShortType, StringType,
-  StructField, StructType}
+  StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Manifest-driven [[FileIndex]] for TableLog snapshots — the mechanism
@@ -22,15 +22,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * AUTOMATICALLY from query predicates (the Delta `TahoeFileIndex` role,
   * built from the public FileIndex contract).
   *
-  * `TableLog.read(skip=..., partitionFilter=...)` prunes only when the
-  * caller hand-delivers the predicate twice. Here, Spark's own
+  * `TableLog.read` plans every snapshot read through it: Spark's own
   * FileSourceStrategy splits the query's WHERE into partitionFilters +
   * dataFilters and passes both to [[listFiles]]; we answer from the
   * MANIFEST alone — partition values parsed from the hive-style relative
-  * paths, value ranges from the `#stats=` lines — before a single footer
-  * is opened or a directory listed. Everything downstream (vectorized
-  * parquet reading, whole-stage codegen, AQE) is the stock engine: the
-  * index only decides which files exist.
+  * paths (typed by Spark's own basePath inference), value ranges from
+  * the `#stats=` lines — before a single footer is opened or a directory
+  * listed. Everything downstream (vectorized parquet reading, whole-stage
+  * codegen, AQE) is the stock engine: the index only decides which files
+  * exist.
   *
   * At 100 TB this is the difference between planning over a manifest in
   * driver memory and listing object-store prefixes: listing cost is
@@ -46,25 +46,19 @@ class TableLogFileIndex(
     // rel path -> per-column (min, max) from #stats= lines
     stats: Map[String, Map[String, (Long, Long)]],
     override val partitionSchema: StructType,
+    // manifest-relative directory ("a=1/b=x/") -> its typed partition values
+    partRows: Map[String, InternalRow],
     // hidden-partitioning transforms (`#layout=` lines): map predicates on
     // SOURCE columns to constraints on the derived layout directories
-    transforms: Seq[PartTransform] = Seq.empty) extends FileIndex {
+    transforms: Seq[PartTransform]) extends FileIndex {
 
   override def rootPaths: Seq[Path] = Seq(new Path(dir))
 
   private[sources] def partValues(rel: String): Seq[String] =
     rel.split('/').init.map(_.split("=", 2)(1)).toSeq
 
-  private[sources] def partRow(rel: String): InternalRow = {
-    val vs = partValues(rel).zip(partitionSchema.fields).map {
-      case (s, f) => f.dataType match {
-        case IntegerType => Int.box(s.toInt)
-        case LongType    => Long.box(s.toLong)
-        case _           => UTF8String.fromString(s)
-      }
-    }
-    InternalRow.fromSeq(vs)
-  }
+  private[sources] def partRow(rel: String): InternalRow =
+    partRows(rel.take(rel.lastIndexOf('/') + 1))
 
   /** Integral bounds implied by the pushed conjuncts, per column name —
     * the same simple shapes parquet footer skipping understands. Anything
@@ -269,22 +263,56 @@ class TableLogFileIndex(
 
 object TableLogFileIndex {
 
-  /** Infer a hive-partition schema from the manifest's relative paths:
-    * column names from the `col=val` segments, IntegerType when every
-    * value parses as an Int, LongType when every value parses as a Long,
-    * StringType otherwise — the same ladder Spark's own partition
-    * inference walks.
+  /** The index over `fileEntries` (paths relative to `dir`), partitioned
+    * as Spark's basePath inference reads the hive-style directories.
     */
-  def inferPartitionSchema(rels: Seq[String]): StructType = {
-    val segs = rels.head.split('/').init.map(_.split("=", 2)(0))
-    StructType(segs.zipWithIndex.map { case (name, i) =>
-      val values = rels.map(_.split('/')(i).split("=", 2)(1))
-      val dt =
-        if (values.forall(v => scala.util.Try(v.toInt).isSuccess)) IntegerType
-        else if (values.forall(v => scala.util.Try(v.toLong).isSuccess)) LongType
-        else StringType
-      StructField(name, dt)
-    })
+  def apply(spark: SparkSession, dir: String,
+            fileEntries: Seq[(String, Long, Long)],
+            stats: Map[String, Map[String, (Long, Long)]] = Map.empty,
+            transforms: Seq[PartTransform] = Seq.empty): TableLogFileIndex = {
+    val (schema, rows) = partitionsOf(spark, dir, fileEntries.map(_._1))
+    new TableLogFileIndex(spark, dir, fileEntries, stats, schema, rows,
+      transforms)
+  }
+
+  /** Hive partitioning of manifest-relative paths: the partition schema
+    * and each directory's typed values, from Spark's OWN inference
+    * (`PartitioningUtils.parsePartitions` — the int, long, decimal,
+    * double, date, timestamp, string ladder, unescaping and
+    * `__HIVE_DEFAULT_PARTITION__` included), so a column types the same
+    * here as under `spark.read.option("basePath", dir)`. Runs on the
+    * manifest's directory names alone; nothing is listed.
+    */
+  private def partitionsOf(spark: SparkSession, dir: String, rels: Seq[String])
+      : (StructType, Map[String, InternalRow]) = {
+    val dirs = rels.map(r => r.take(r.lastIndexOf('/') + 1)).distinct
+    if (dirs.forall(_.isEmpty)) (new StructType(), Map("" -> InternalRow.empty))
+    else {
+      val root = new Path(dir)
+      val qRoot = root.getFileSystem(spark.sessionState.newHadoopConf())
+        .makeQualified(root)
+      val leaf = dirs.map(d => d -> new Path(qRoot, d.stripSuffix("/")))
+      val spec = new ManifestDirs(spark, qRoot, leaf.map(_._2)).partitionSpec()
+      val byPath = spec.partitions.map(p => p.path -> p.values).toMap
+      (spec.partitionColumns, leaf.map { case (d, p) => d -> byPath(p) }.toMap)
+    }
+  }
+
+  /** Exposes [[PartitioningAwareFileIndex]]'s partition inference over a
+    * given set of leaf directories (one placeholder data file each)
+    * instead of a listing.
+    */
+  private class ManifestDirs(spark: SparkSession, root: Path, leafDirs: Seq[Path])
+      extends PartitioningAwareFileIndex(spark, Map.empty, None) {
+    override def rootPaths: Seq[Path] = Seq(root)
+    override def refresh(): Unit = ()
+    override def partitionSpec(): PartitionSpec = inferPartitioning()
+    override protected def leafFiles
+        : scala.collection.mutable.LinkedHashMap[Path, FileStatus] =
+      scala.collection.mutable.LinkedHashMap.empty
+    override protected def leafDirToChildrenFiles: Map[Path, Array[FileStatus]] =
+      leafDirs.map(d => d -> Array(new FileStatus(0L, false, 1, 0L, 0L,
+        new Path(d, "part")))).toMap
   }
 
   /** Assemble the DataFrame over a [[TableLogFileIndex]]: a stock

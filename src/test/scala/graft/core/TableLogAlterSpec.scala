@@ -107,13 +107,12 @@ class TableLogAlterSpec extends SparkSpec {
     assert(TableLog.read(spark, dir)
       .filter($"k" === 50).select($"amount").as[Long].head() == -1L)
     // stats skip accepts the logical column (stats lines carry "v")
-    val skipped = TableLog.read(spark, dir, skip = Some(("amount", 10L, 20L)))
-    assert(skipped.filter($"amount".between(10, 20)).count() > 0)
+    val skipped = TableLog.read(spark, dir).where($"amount".between(10, 20))
+    assert(skipped.count() > 0)
     // fresh stats after the rename keep skipping (append + read again)
     TableLog.append(spark, dir,
       Seq((1000L, 5000L)).toDF("k", "amount").coalesce(1), statsCol = Some("amount"))
-    assert(TableLog.read(spark, dir, skip = Some(("amount", 5000L, 5000L)))
-      .filter($"amount" === 5000L).count() == 1)
+    assert(TableLog.read(spark, dir).where($"amount" === 5000L).count() == 1)
   }
 
   test("compact keeps the physical layout; vectors retire; logical intact") {
@@ -179,7 +178,7 @@ class TableLogAlterSpec extends SparkSpec {
     // direction; nothing arbitrates (the table never ran an ALTER)
     TableLog.append(spark, dir, Seq((2L, "oops")).toDF("k", "v").coalesce(1))
     val e = intercept[org.apache.spark.SparkException] {
-      TableLog.table(spark, dir).collect()
+      TableLog.read(spark, dir).collect()
     }
     assert(e.getMessage.contains("CANNOT_MERGE_SCHEMAS") ||
       e.getMessage.contains("Failed merging schemas"), e.getMessage)
@@ -187,7 +186,7 @@ class TableLogAlterSpec extends SparkSpec {
     val dir2 = freshDir("alter_widen_ok")
     TableLog.append(spark, dir2, Seq((1L, 10)).toDF("k", "v").coalesce(1))
     TableLog.append(spark, dir2, Seq((2L, 20L)).toDF("k", "v").coalesce(1))
-    assert(TableLog.table(spark, dir2).agg(sum($"v")).as[Long].head() == 30L)
+    assert(TableLog.read(spark, dir2).agg(sum($"v")).as[Long].head() == 30L)
   }
 
   test("table properties: set, merge, unset; carried across appends") {

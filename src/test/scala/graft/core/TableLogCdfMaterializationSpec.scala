@@ -104,4 +104,28 @@ class TableLogCdfMaterializationSpec extends SparkSpec {
     assert(after.subsetOf(retained), s"stale sidecars: ${after -- retained}")
     assert(after.size < before.size)
   }
+
+  test("a multi-version sidecar batch plans from every version's footer: " +
+    "a column a DML adds without ALTER surfaces in the feed") {
+    val dir = freshDir("graft_cdf_drift")
+    TableLog.append(spark, dir,
+      spark.range(0, 10).select($"id", ($"id" * 10).as("v")).coalesce(1))
+    TableLog.setTableProperties(spark, dir,
+      Map(TableLog.CdfProp -> "true", TableLog.CdfKeysProp -> "id"))
+    val v0 = TableLog.versions(spark, dir).last
+    TableLog.deleteWhereDv(spark, dir, $"id" === 1)   // sidecar: (id, v)
+    TableLog.upsert(spark, dir,                        // sidecar: (id, v, tag)
+      Seq((2L, 20L, "x")).toDF("id", "v", "tag"), Seq("id"))
+    val tip = TableLog.versions(spark, dir).last
+    assert(TableLog.materializedChangeVersions(spark, dir).keySet ==
+      Set(v0 + 1, v0 + 2))
+    // both commits are sidecar-served in one schema era: ONE scan whose
+    // schema must merge both versions' footers
+    val feed = TableLog.changes(spark, dir, v0, tip, keys = Seq("id"))
+    assert(feed.columns.contains("tag"), feed.columns.mkString(","))
+    assert(feed.filter($"_change_type" === "update_postimage" && $"id" === 2)
+      .select($"tag").as[String].collect().toSeq == Seq("x"))
+    assert(feed.filter($"_change_type" === "delete")
+      .select($"id").as[Long].collect().toSeq == Seq(1L))
+  }
 }

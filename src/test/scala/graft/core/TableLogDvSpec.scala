@@ -108,11 +108,11 @@ class TableLogDvSpec extends SparkSpec {
     TableLog.append(spark, dir, df, partitionBy = Seq("p"),
       statsCol = Some("val"))
     TableLog.deleteWhereDv(spark, dir, col("id") === 4) // p=0 partition
-    val p0 = TableLog.read(spark, dir, partitionFilter = Seq(("p", "0")))
+    val p0 = TableLog.read(spark, dir).where(col("p") === 0)
     assert(p0.count() == 99)
     assert(p0.filter(col("id") === 4).count() == 0)
     // skipping path (file subset) still applies the vector
-    val skipped = TableLog.read(spark, dir, skip = Some(("val", 0L, 100L)))
+    val skipped = TableLog.read(spark, dir).where(col("val").between(0, 100))
     assert(skipped.filter(col("id") === 4).count() == 0)
   }
 
@@ -154,15 +154,15 @@ class TableLogDvSpec extends SparkSpec {
     assert(TableLog.dvEntryCount(spark, dir) == 40)
     // rewrite ONE partition: its 20 entries go inert but stay COUNTED
     TableLog.compactPartition(spark, dir, ("p", "1"), targetBytes = 1L)
-    assert(TableLog.table(spark, dir).count() == 360)
+    assert(TableLog.read(spark, dir).count() == 360)
     assert(TableLog.dvEntryCount(spark, dir) == 40) // inert still counted
-    val visibleBefore = TableLog.table(spark, dir)
+    val visibleBefore = TableLog.read(spark, dir)
       .orderBy($"id").as[(Long, Long)].collect().toSeq
     val (before, after, _) = TableLog.compactDeletes(spark, dir)
     assert(before == 40 && after == 20) // p=1's inert entries retired
     assert(TableLog.dvEntryCount(spark, dir) == 20)
     // semantically a no-op: the visible row set is identical
-    assert(TableLog.table(spark, dir)
+    assert(TableLog.read(spark, dir)
       .orderBy($"id").as[(Long, Long)].collect().toSeq == visibleBefore)
   }
 

@@ -28,8 +28,6 @@ class TableLogEqDeleteSpec extends SparkSpec {
     assert(t.count() == 80)
     assert(t.filter($"u".isin(3, 7)).count() == 0)
     assert(TableLog.read(spark, dir, version = Some(1L)).count() == 100)
-    // FileIndex path agrees
-    assert(TableLog.table(spark, dir).count() == 80)
   }
 
   test("rows appended AFTER the delete with a deleted key are hidden too") {

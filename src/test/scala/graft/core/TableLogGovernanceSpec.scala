@@ -62,7 +62,6 @@ class TableLogGovernanceSpec extends SparkSpec {
     TableLog.append(spark, dir, spark.range(10, 30).select($"id"))
     assert(TableLog.versionAsOf(spark, dir, between) == 1L)
     assert(TableLog.read(spark, dir, asOfTimestamp = Some(between)).count() == 10)
-    assert(TableLog.table(spark, dir, asOfTimestamp = Some(between)).count() == 10)
     assert(TableLog.read(spark, dir).count() == 30)
     // before the first commit: no version existed
     intercept[IllegalArgumentException] {

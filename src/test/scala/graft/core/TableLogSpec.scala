@@ -9,6 +9,10 @@ class TableLogSpec extends SparkSpec {
   private def freshDir() =
     java.nio.file.Files.createTempDirectory("graft_tlog").toString
 
+  /** numFiles the executed scans planned over (after pruning). */
+  private def scannedFiles(df: org.apache.spark.sql.DataFrame): Long =
+    graft.TestPlans.scannedFiles(df)
+
   test("manifest pressure: ~1k commits on a maintained table keep open/commit flat") {
     // Full-snapshot manifests cost O(current files) bytes per commit --
     // open and commit both touch exactly ONE manifest, so the operative
@@ -167,20 +171,20 @@ class TableLogSpec extends SparkSpec {
       spark.range(i * 100L, (i + 1) * 100L).select($"id").coalesce(1),
       statsCol = Some("id")))
     val full = TableLog.read(spark, dir)
-    assert(full.inputFiles.length == 4)
+    assert(scannedFiles(full) == 4)
     // range [150,249] intersects exactly files 1 and 2 — pruned from the
     // manifest's #stats lines alone
-    val skipped = TableLog.read(spark, dir, skip = Some(("id", 150L, 249L)))
-    assert(skipped.inputFiles.length == 2, skipped.inputFiles.mkString(","))
-    assert(skipped.filter($"id".between(150, 249)).count() == 100)
+    val skipped = TableLog.read(spark, dir).where($"id".between(150, 249))
+    assert(scannedFiles(skipped) == 2)
+    assert(skipped.count() == 100)
     // stats ride with carried files across later commits (self-contained
     // manifests): a stats-less append doesn't strip the old files' stats
     TableLog.append(spark, dir, spark.range(1000, 1010).select($"id").coalesce(1))
-    val after = TableLog.read(spark, dir, skip = Some(("id", 0L, 99L)))
+    val after = TableLog.read(spark, dir).where($"id".between(0, 99))
     // file 0 matches; files 1-3 skipped; the stats-less new file is kept
     // conservatively
-    assert(after.inputFiles.length == 2, after.inputFiles.mkString(","))
-    assert(after.filter($"id" < 100).count() == 100)
+    assert(scannedFiles(after) == 2)
+    assert(after.count() == 100)
   }
 
   test("per-partition compaction rewrites one partition, leaves the rest cold") {
@@ -208,7 +212,7 @@ class TableLogSpec extends SparkSpec {
   test("compactPartition preserves the FULL hive layout on multi-column partitioning") {
     // regression: compacting on the inner column must not flatten the
     // outer column out of the path (which would silently break every
-    // later partitionFilter on it)
+    // later partition predicate on it)
     val dir = freshDir()
     (0 until 2).foreach(_ => TableLog.append(spark, dir,
       Seq((1L, 1, 1), (2L, 1, 2), (3L, 2, 2)).toDF("id", "market", "et").coalesce(1),
@@ -220,10 +224,8 @@ class TableLogSpec extends SparkSpec {
     assert(snap.inputFiles.filter(_.contains("et=2"))
       .forall(f => f.contains("market=1/et=2/") || f.contains("market=2/et=2/")))
     // partition filters on BOTH columns still work over the new layout
-    assert(TableLog.read(spark, dir, partitionFilter = Seq("market" -> "2"))
-      .count() == 2)
-    assert(TableLog.read(spark, dir, partitionFilter = Seq("et" -> "2"))
-      .count() == 4)
+    assert(TableLog.read(spark, dir).where($"market" === 2).count() == 2)
+    assert(TableLog.read(spark, dir).where($"et" === 2).count() == 4)
   }
 
   test("clustered compaction restores skipping selectivity on unclustered data") {
@@ -233,16 +235,16 @@ class TableLogSpec extends SparkSpec {
     (0 until 4).foreach(i => TableLog.append(spark, dir,
       spark.range(0, 400).filter($"id" % 4 === i).select($"id").coalesce(1),
       statsCol = Some("id")))
-    val before = TableLog.read(spark, dir, skip = Some(("id", 100L, 149L)))
-    assert(before.inputFiles.length == 4) // nothing skippable
+    val before = TableLog.read(spark, dir).where($"id".between(100, 149))
+    assert(scannedFiles(before) == 4) // nothing skippable
     // OPTIMIZE with clustering + fresh stats: files become range-disjoint
     val (_, nAfter, _) = TableLog.compact(spark, dir, targetBytes = 3000,
       clusterBy = Seq("id"), statsCol = Some("id"))
     assert(nAfter >= 2)
-    val after = TableLog.read(spark, dir, skip = Some(("id", 100L, 149L)))
-    assert(after.inputFiles.length < nAfter,
-      s"skip pruned nothing: ${after.inputFiles.length} of $nAfter")
-    assert(after.filter($"id".between(100, 149)).count() == 50)
+    val after = TableLog.read(spark, dir).where($"id".between(100, 149))
+    val scanned = scannedFiles(after)
+    assert(scanned < nAfter, s"skip pruned nothing: $scanned of $nAfter")
+    assert(after.count() == 50)
     assert(TableLog.read(spark, dir).count() == 400)
   }
 
@@ -264,10 +266,10 @@ class TableLogSpec extends SparkSpec {
     TableLog.append(spark, dir,
       Seq((1L, 2, 1), (2L, 2, 2), (3L, 1, 2)).toDF("id", "market", "et"),
       partitionBy = Seq("market", "et"))
-    val et2 = TableLog.read(spark, dir, partitionFilter = Seq("et" -> "2"))
+    val et2 = TableLog.read(spark, dir).where($"et" === 2)
     assert(et2.select($"id").as[Long].collect().toSet == Set(2L, 3L))
     // empty partition = empty result with schema, not an exception
-    val none = TableLog.read(spark, dir, partitionFilter = Seq("et" -> "9"))
+    val none = TableLog.read(spark, dir).where($"et" === 9)
     assert(none.count() == 0 && none.columns.toSet == Set("id", "market", "et"))
   }
 
@@ -319,10 +321,11 @@ class TableLogSpec extends SparkSpec {
     assert(snap.filter($"bucket" === 2).count() == 35)
     // partition filter prunes at the manifest: only bucket=2 files are
     // even handed to the reader
-    val pruned = TableLog.read(spark, dir, partitionFilter = Seq("bucket" -> "2"))
+    val pruned = TableLog.read(spark, dir).where($"bucket" === 2)
     assert(pruned.count() == 35)
-    assert(pruned.inputFiles.forall(_.contains("bucket=2/")))
-    assert(pruned.inputFiles.length < snap.inputFiles.length)
+    assert(pruned.select($"_metadata.file_path").as[String].collect()
+      .forall(_.contains("bucket=2/")))
+    assert(scannedFiles(pruned) < scannedFiles(snap))
     // overwrite compacts per-partition semantics away; vacuum reclaims the
     // replaced files inside partition subdirectories
     TableLog.overwrite(spark, dir,
@@ -507,7 +510,49 @@ class TableLogSpec extends SparkSpec {
     TableLog.restore(spark, dir, 2)
     // stats survived the overwrite->restore round trip: a range read on
     // the restored tip still prunes to the matching slice only
-    val pruned = TableLog.read(spark, dir, skip = Some(("id", 150L, 160L)))
-    assert(pruned.count() < 200 && pruned.filter($"id".between(150, 160)).count() == 11)
+    val pruned = TableLog.read(spark, dir).where($"id".between(150, 160))
+    assert(scannedFiles(pruned) < scannedFiles(TableLog.read(spark, dir)))
+    assert(pruned.count() == 11)
+  }
+
+  test("a same-length overwrite at the same path never serves the old footer") {
+    val scratch = freshDir()
+    def single(df: org.apache.spark.sql.DataFrame, name: String): java.io.File = {
+      df.coalesce(1).write.parquet(s"$scratch/$name")
+      new java.io.File(scratch, name).listFiles
+        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+    }
+    // same rows, same-length column name: byte-for-byte the same size
+    val a = single(Seq(1L, 2L).toDF("a"), "a")
+    val b = single(Seq(1L, 2L).toDF("b"), "b")
+    assert(a.length == b.length)
+    val target = new java.io.File(scratch, "f.parquet")
+    def schemaNames =
+      TableLog.footerMergedSchema(spark, scratch, Seq("f.parquet"), strict = true)
+        .fieldNames.toSeq
+    java.nio.file.Files.copy(a.toPath, target.toPath)
+    assert(schemaNames == Seq("a"))
+    java.nio.file.Files.copy(b.toPath, target.toPath,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    assert(target.setLastModified(target.lastModified + 5000))
+    assert(target.length == a.length)
+    assert(schemaNames == Seq("b"))
+  }
+
+  test("a data file without Spark's footer schema fails the read, named") {
+    val dir = freshDir()
+    // a parquet file from a non-Spark writer: no catalyst schema stamp
+    val schema = org.apache.parquet.schema.MessageTypeParser
+      .parseMessageType("message m { required int64 id; }")
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$dir/foreign.parquet"))
+      .withType(schema).build()
+    w.write(new org.apache.parquet.example.data.simple.SimpleGroupFactory(schema)
+      .newGroup().append("id", 7L))
+    w.close()
+    val e = intercept[IllegalStateException] {
+      TableLog.footerMergedSchema(spark, dir, Seq("foreign.parquet"), strict = true)
+    }
+    assert(e.getMessage.contains("foreign.parquet"), e.getMessage)
   }
 }

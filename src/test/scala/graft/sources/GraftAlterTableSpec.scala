@@ -174,7 +174,7 @@ class GraftAlterTableSpec extends SparkSpec {
     val dir = s"$wh/db/w"
     assert(TableLog.read(spark, dir).agg(sum($"k")).as[Long].head() ==
       (0L until 50L).sum + Int.MaxValue.toLong + 1)
-    assert(TableLog.table(spark, dir).count() == 51)
+    assert(TableLog.read(spark, dir).count() == 51)
     // MoR composes: dv-delete a pre-widening row, read through SQL
     TableLog.deleteWhereDv(spark, dir, $"k" === 7L)
     assert(spark.table(s"$cat.db.w").count() == 50)

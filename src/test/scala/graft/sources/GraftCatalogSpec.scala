@@ -6,7 +6,7 @@ import graft.core.TableLog
 
 /** The SQL/catalog front door: `spark.read.format("graft")` and
   * `spark.table("graft.schema.name")` must answer exactly like
-  * `TableLog.table(...)`, resolve time travel, and keep the manifest
+  * `TableLog.read(...)`, resolve time travel, and keep the manifest
   * index's pruning/skipping through the DSv2 scan.
   */
 class GraftCatalogSpec extends SparkSpec {
@@ -30,7 +30,7 @@ class GraftCatalogSpec extends SparkSpec {
     val v1 = spark.read.format("graft").option("versionAsOf", 1).load(dir)
     assert(v1.count() == 100)
     // agrees with the API path value-for-value
-    val api = TableLog.table(spark, dir).agg(sum($"id")).as[Long].head()
+    val api = TableLog.read(spark, dir).agg(sum($"id")).as[Long].head()
     val sql = tip.agg(sum($"id")).as[Long].head()
     assert(api == sql)
   }
@@ -90,7 +90,7 @@ class GraftCatalogSpec extends SparkSpec {
     val t = spark.read.format("graft").load(dir)
     assert(t.count() == 42)
     assert(t.agg(sum($"id")).as[Long].head() ==
-      TableLog.table(spark, dir).agg(sum($"id")).as[Long].head())
+      TableLog.read(spark, dir).agg(sum($"id")).as[Long].head())
     // filters still answer correctly THROUGH the MoR scan (pushdown on)
     assert(t.filter($"id" < 10).as[(Long, String)].collect().map(_._1).sorted
       .sameElements(Array(1L, 2, 3, 4, 5, 6, 8, 9)))
@@ -108,7 +108,7 @@ class GraftCatalogSpec extends SparkSpec {
     TableLog.deleteWhereDv(spark, dir, $"id" === 0L)       // 1 more
     val t = spark.read.format("graft").load(dir)
     assert(t.count() == 79)
-    val api = TableLog.table(spark, dir)
+    val api = TableLog.read(spark, dir)
     assert(t.agg(sum($"id")).as[Long].head() ==
       api.agg(sum($"id")).as[Long].head())
     // pruning a key column out of the projection still applies the delete
@@ -134,7 +134,7 @@ class GraftCatalogSpec extends SparkSpec {
         }.flatten
     }.flatten
     assert(planned.nonEmpty && planned.forall(_.contains("p=2")), planned)
-    assert(TableLog.table(spark, dir).filter($"p" === 2).count() == 100)
+    assert(TableLog.read(spark, dir).filter($"p" === 2).count() == 100)
   }
 
   test("MoR scan keeps the VECTORIZED path when planned files avoid every " +
@@ -200,7 +200,7 @@ class GraftCatalogSpec extends SparkSpec {
       spark.range(0, 50).select($"id", ($"id" % 10).as("u")).coalesce(1))
     TableLog.deleteKeys(spark, dir,
       Seq(3, 8).toDF("u").select($"u".cast("int"))) // INT keys, BIGINT col
-    assert(TableLog.table(spark, dir).count() == 40) // API path
+    assert(TableLog.read(spark, dir).count() == 40) // API path
     val t = spark.read.format("graft").load(dir)
     assert(t.count() == 40, "SQL front door resurrected eq-deleted rows")
     assert(t.select($"id").count() == 40)
@@ -220,7 +220,7 @@ class GraftCatalogSpec extends SparkSpec {
     assert(spark.sql("SELECT sum(k) FROM graftw.silver.t").as[Long].head() == 6L)
     // hive layout landed (partition pruning works on the written table)
     val dir = s"$wh/silver/t"
-    val files = TableLog.table(spark, dir).filter($"g" === 0)
+    val files = TableLog.read(spark, dir).filter($"g" === 0)
       .select(input_file_name()).distinct().as[String].collect()
     assert(files.nonEmpty && files.forall(_.contains("g=0")), files.toSeq)
     spark.sql("INSERT OVERWRITE graftw.silver.t VALUES (9, 'z', 2)")

@@ -95,7 +95,7 @@ class GraftRowLevelSpec extends SparkSpec {
     assert(got == Seq((1L, "a", 10L), (2L, "B", 200L), (3L, "c", 30L),
       (4L, "D", 400L)))
     // API path sees the same snapshot (shared dv/data machinery)
-    assert(TableLog.table(spark, dir).count() == 4)
+    assert(TableLog.read(spark, dir).count() == 4)
   }
 
   test("MERGE INTO with NOT MATCHED BY SOURCE DELETE") {

@@ -28,13 +28,13 @@ class HiddenPartitioningSpec extends SparkSpec {
       yield (ts(f"2024-03-0$d $h%02d:30:00"), (d * 100 + h).toLong)
     TableLog.append(spark, dir, rows.toDF("ts", "v"),
       transforms = Seq(DaysOf("ts")))
-    val t = TableLog.table(spark, dir)
+    val t = TableLog.read(spark, dir)
     // hidden: the derived column is not in the schema
     assert(!t.columns.contains("_tp_day_ts"), t.columns.mkString(","))
     val total = scannedFiles(t)
     assert(total >= 8) // at least one file per day directory
     // a two-day window on the RAW ts column scans only those directories
-    val q = TableLog.table(spark, dir)
+    val q = TableLog.read(spark, dir)
       .filter($"ts" >= ts("2024-03-03 00:00:00") && $"ts" < ts("2024-03-05 00:00:00"))
     assert(q.count() == 48)
     assert(scannedFiles(q) * 4 <= total, s"${scannedFiles(q)} vs $total")
@@ -45,7 +45,7 @@ class HiddenPartitioningSpec extends SparkSpec {
     val rows = for (d <- 1 to 4) yield (ts(s"2024-03-0$d 12:00:00"), d.toLong)
     TableLog.append(spark, dir, rows.toDF("ts", "v"),
       transforms = Seq(DaysOf("ts")))
-    val q = TableLog.table(spark, dir).filter($"ts" === ts("2024-03-02 12:00:00"))
+    val q = TableLog.read(spark, dir).filter($"ts" === ts("2024-03-02 12:00:00"))
     assert(q.count() == 1)
     assert(scannedFiles(q) == 1)
   }
@@ -54,17 +54,17 @@ class HiddenPartitioningSpec extends SparkSpec {
     val dir = freshDir()
     val df = spark.range(0, 1000).select($"id", ($"id" * 3).as("v"))
     TableLog.append(spark, dir, df, transforms = Seq(BucketOf(8, "id")))
-    val t = TableLog.table(spark, dir)
+    val t = TableLog.read(spark, dir)
     assert(!t.columns.contains("_tp_bucket_id"))
     val total = scannedFiles(t)
     assert(total >= 8)
-    val q = TableLog.table(spark, dir).filter($"id" === 777)
+    val q = TableLog.read(spark, dir).filter($"id" === 777)
     assert(q.count() == 1)
     assert(q.select("v").as[Long].head() == 2331)
     // exactly the one bucket directory holding xxhash64(777) % 8
     assert(scannedFiles(q) * 8 <= total * 2, s"${scannedFiles(q)} vs $total")
     // a range predicate cannot prune hash buckets: conservatively all kept
-    val r = TableLog.table(spark, dir).filter($"id" < 100)
+    val r = TableLog.read(spark, dir).filter($"id" < 100)
     assert(r.count() == 100)
     assert(scannedFiles(r) == total)
   }
@@ -73,8 +73,8 @@ class HiddenPartitioningSpec extends SparkSpec {
     val dir = freshDir()
     val df = Seq.tabulate(100)(i => (s"user_$i", i.toLong)).toDF("u", "v")
     TableLog.append(spark, dir, df, transforms = Seq(BucketOf(4, "u")))
-    val total = scannedFiles(TableLog.table(spark, dir))
-    val q = TableLog.table(spark, dir).filter($"u" === "user_42")
+    val total = scannedFiles(TableLog.read(spark, dir))
+    val q = TableLog.read(spark, dir).filter($"u" === "user_42")
     assert(q.select("v").as[Long].head() == 42L)
     assert(scannedFiles(q) < total)
   }
@@ -83,10 +83,10 @@ class HiddenPartitioningSpec extends SparkSpec {
     val dir = freshDir()
     val df = spark.range(0, 1000).select($"id")
     TableLog.append(spark, dir, df, transforms = Seq(TruncateOf(100, "id")))
-    val t = TableLog.table(spark, dir)
+    val t = TableLog.read(spark, dir)
     val total = scannedFiles(t)
     assert(total >= 10)
-    val q = TableLog.table(spark, dir).filter($"id" >= 250 && $"id" < 350)
+    val q = TableLog.read(spark, dir).filter($"id" >= 250 && $"id" < 350)
     assert(q.count() == 100)
     // ids 250..349 live in truncate buckets 200 and 300 only
     assert(scannedFiles(q) * 5 <= total, s"${scannedFiles(q)} vs $total")
@@ -100,10 +100,10 @@ class HiddenPartitioningSpec extends SparkSpec {
     TableLog.append(spark, dir, mk(5, 9), transforms = Seq(DaysOf("ts")))
     // #layout= carries through non-transform commits too (e.g. a dv delete)
     TableLog.deleteWhereDv(spark, dir, col("v") === 2L)
-    val q = TableLog.table(spark, dir)
+    val q = TableLog.read(spark, dir)
       .filter($"ts" >= ts("2024-03-06 00:00:00"))
     assert(q.count() == 3)
-    val all = TableLog.table(spark, dir)
+    val all = TableLog.read(spark, dir)
     assert(all.count() == 7) // 8 days minus the dv-deleted row
     assert(scannedFiles(q) < scannedFiles(all))
   }
@@ -115,8 +115,8 @@ class HiddenPartitioningSpec extends SparkSpec {
     TableLog.append(spark, dir, rows.toDF("ts", "m", "v"),
       partitionBy = Seq("m"), statsCol = Some("v"),
       transforms = Seq(DaysOf("ts")))
-    val total = scannedFiles(TableLog.table(spark, dir))
-    val q = TableLog.table(spark, dir)
+    val total = scannedFiles(TableLog.read(spark, dir))
+    val q = TableLog.read(spark, dir)
       .filter($"m" === "b" && $"ts" >= ts("2024-03-03 00:00:00") && $"v" < 4000)
     assert(q.count() == 5) // day 3, market b, v in [3000, 3004]
     assert(scannedFiles(q) < total)

@@ -1,6 +1,9 @@
 #!/bin/bash
 # Fast main-class runner: uses compiled classes + /opt/spark/jars directly,
 # skipping sbt JVM startup. Usage: tools/run.sh graft.Verify <args...>
+# src/main/resources rides on the classpath too: `sbt compile` alone does
+# not copy META-INF/services into target/, and without it the `graft`
+# data source does not resolve.
 set -e
 cd "$(dirname "$0")/.."
 ADD_OPENS=""
@@ -18,5 +21,5 @@ exec java $ADD_OPENS \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
   ${SPARK_EXTRA_JAVA_OPTS:-} \
-  -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "target/scala-2.13/classes:src/main/resources:/opt/spark/jars/*" \
   "$@"
