@@ -990,13 +990,17 @@ object TableLog {
     val w = mapped.write.mode("overwrite")
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(stage.toString)
-    // qualified: listFiles returns absolute paths even when dir is relative
+    // qualified: listStatus returns absolute paths even when dir is relative
     val stageUri = fs.makeQualified(stage).toUri.getPath
-    val parts = fs.listFiles(stage, true)
+    // walked with listStatus, not listFiles: listFiles' LocatedFileStatus
+    // loads each file's permissions, which Hadoop's local filesystem does
+    // by spawning `ls -ld` once per staged file
+    def walk(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(p).toSeq.flatMap(s =>
+        if (s.isDirectory) walk(s.getPath) else Seq(s))
     val out = scala.collection.mutable.ListBuffer.empty[String]
-    while (parts.hasNext) {
-      val s = parts.next()
-      if (s.isFile && s.getPath.getName.startsWith("part-")) {
+    walk(stage).foreach { s =>
+      if (s.getPath.getName.startsWith("part-")) {
         val rel = s.getPath.toUri.getPath.stripPrefix(stageUri).stripPrefix("/")
         val relDir = rel.lastIndexOf('/') match {
           case -1 => ""
@@ -1076,7 +1080,11 @@ object TableLog {
                      // ALTER TABLE's hook: maps the carried property-line
                      // set to the new one (replace `#schema=`, rewrite
                      // `#tblprop=`); re-evaluated per retry like mkFiles
-                     mkProps: Seq[String] => Seq[String] = identity)
+                     mkProps: Seq[String] => Seq[String] = identity,
+                     // the commit's own change rows, given the won commit's
+                     // parent version (see [[ownChanges]]); None re-derives
+                     // them from the log
+                     ownChangeRows: Long => Option[DataFrame] = _ => None)
       : Option[Long] = {
     val fs = fsOf(spark, dir)
     fs.mkdirs(new Path(dir, LogDir))
@@ -1153,7 +1161,8 @@ object TableLog {
         // runs AFTER the CAS win, against the exact pre/post line sets of
         // the won commit — a failure here leaves the commit durable and
         // the feed serving this version via reconstruction
-        maybeMaterializeChanges(spark, dir, v, op, tipLines, state)
+        maybeMaterializeChanges(spark, dir, v, op, tipLines, state,
+          ownChangeRows(tip.getOrElse(0L)))
       }
     }
     Some(committed)
@@ -1804,44 +1813,62 @@ object TableLog {
     val lines = manifestLines(spark, dir, tip)
     val all = lines.filterNot(_.startsWith("#"))
     val snapFiles = all.toSet
-    val matches = visibleRows(spark, dir, all, lines, metaSchema(lines),
+    val matched = visibleRows(spark, dir, all, lines, metaSchema(lines),
         pathPartCols(all))
       .filter(org.apache.spark.sql.functions.coalesce(
         cond, org.apache.spark.sql.functions.lit(false)))
-      .select(col("_dv_file"), col("_dv_idx"))
-    val commitId = java.util.UUID.randomUUID().toString.take(8)
-    val dvDir = s"$DvDir/$commitId"
-    matches.write.parquet(s"$dir/$dvDir")
-    val fs = fsOf(spark, dir)
-    val freshDv = fs.listStatus(new Path(dir, dvDir)).toSeq
-      .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-      .map(s => s"$dvDir/${s.getPath.getName}")
-    // row count from the written sidecars' FOOTERS — driver metadata, no
-    // job, no second evaluation of the predicate
-    val nDeleted = footerRowCount(spark, freshDv.map(f => new Path(dir, f)))
-    if (nDeleted == 0) {
-      fs.delete(new Path(dir, dvDir), true)
-      return (tip, 0L)
-    }
-    val guard = serializableGuard(spark, snapFiles, "deleteWhereDv")
-    val v = try {
-      commit(spark, dir,
-        mkFiles = base => {
-          if (!snapFiles.subsetOf(base.toSet))
-            throw new java.util.ConcurrentModificationException(
-              s"files under $dir were rewritten during deleteWhereDv; aborting")
-          guard(base)
-          base
-        },
-        mkDv = tipDv => tipDv ++ freshDv.map(f => s"#dvp=$f"),
-        op = "delete_dv")
-    } catch {
-      case e: java.util.ConcurrentModificationException =>
-        fs.delete(new Path(dir, dvDir), true) // orphan sidecar cleanup
-        throw e
-    }
-    (v.get, nDeleted)
+    // with the change feed on, the matched rows ARE this delete's change
+    // rows (its pre-images): cached, so the sidecar and the change rows
+    // both come from this one scan instead of a post-commit rescan
+    val cdf = cdfEnabled(metaProps(lines))
+    if (cdf) matched.persist()
+    try {
+      val commitId = java.util.UUID.randomUUID().toString.take(8)
+      val dvDir = s"$DvDir/$commitId"
+      matched.select(col("_dv_file"), col("_dv_idx")).write.parquet(s"$dir/$dvDir")
+      val fs = fsOf(spark, dir)
+      val freshDv = fs.listStatus(new Path(dir, dvDir)).toSeq
+        .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
+        .map(s => s"$dvDir/${s.getPath.getName}")
+      // row count from the written sidecars' FOOTERS — driver metadata, no
+      // job, no second evaluation of the predicate
+      val nDeleted = footerRowCount(spark, freshDv.map(f => new Path(dir, f)))
+      if (nDeleted == 0) {
+        fs.delete(new Path(dir, dvDir), true)
+        return (tip, 0L)
+      }
+      val guard = serializableGuard(spark, snapFiles, "deleteWhereDv")
+      val v = try {
+        commit(spark, dir,
+          mkFiles = base => {
+            if (!snapFiles.subsetOf(base.toSet))
+              throw new java.util.ConcurrentModificationException(
+                s"files under $dir were rewritten during deleteWhereDv; aborting")
+            guard(base)
+            base
+          },
+          mkDv = tipDv => tipDv ++ freshDv.map(f => s"#dvp=$f"),
+          op = "delete_dv",
+          ownChangeRows = ownChanges(tip, matched.drop("_dv_file", "_dv_idx")
+            .withColumn("_change_type", lit("delete"))))
+      } catch {
+        case e: java.util.ConcurrentModificationException =>
+          fs.delete(new Path(dir, dvDir), true) // orphan sidecar cleanup
+          throw e
+      }
+      (v.get, nDeleted)
+    } finally if (cdf) matched.unpersist()
   }
+
+  /** The parent-version rule for a commit's own change rows: `rows` were
+    * computed against `snapshot`, so they serve the won commit only when
+    * its parent IS that snapshot. A commit that rebased onto a racing
+    * writer's version (an append, or a delete hiding some of the same
+    * rows) re-derives its change rows from the log instead.
+    */
+  private[core] def ownChanges(snapshot: Long, rows: => DataFrame)
+      : Long => Option[DataFrame] =
+    parent => if (parent == snapshot) Some(rows) else None
 
   /** EQUALITY delete — Iceberg's second delete format, complementing the
     * positional deletion vectors: the predicate is a SET OF KEY VALUES
@@ -2258,11 +2285,6 @@ object TableLog {
       op = s"restore($version)", mkDv = _ => dvLines(target)).get
   }
 
-  /** The table's commit history, newest first — `DESCRIBE HISTORY`:
-    * one row per retained version with its operation (`#op=` manifest
-    * metadata; pre-op manifests read as "write") and file count. A pure
-    * metadata read: manifests only, no data files touched.
-    */
   /** Log-derived CHANGE FEED over a version window — the Delta CDF role
     * for this table format (reference consumers: the SCD2 dimension
     * maintenance in src/utils/scd_type2.py wants exactly "what changed
@@ -2277,33 +2299,38 @@ object TableLog {
     *    (copy-on-write rewrites) + rows the commit's NEW dv entries hide
     *    (row-level UPDATE/MERGE/delete_dv — read from the dv-touched
     *    files only, never a full scan) + rows matching NEW eq-delete keys.
-    *  - `keys` (the business key) pairs them: keys present on both sides
-    *    become update_preimage/update_postimage, pre-only rows are
-    *    deletes, post-only rows are inserts — full CDF fidelity for SQL
-    *    UPDATE and MERGE INTO commits. On REWRITE commits (files
-    *    removed), keyed pairs whose row is IDENTICAL on both sides (a
-    *    copy-on-write rewrite carries every row of the rewritten file,
-    *    changed or not) are SUPPRESSED, matching Delta CDF's
-    *    only-actually-changed-rows contract — an SCD2 consumer sees no
-    *    spurious history versions; delta (dv) commits carry exactly the
-    *    rows the command touched and skip the compare. Without `keys` a
-    *    delta commit
-    *    degrades to pre→update_preimage / post→update_postimage for ALL
-    *    carried rows, unchanged ones included (a pure UPDATE is exactly
-    *    that; pass the key for exact, no-op-suppressed classification).
+    *  - `keys` (the business key) pairs them, per row: on REWRITE
+    *    commits (files removed) a row IDENTICAL on both sides cancels one
+    *    for one (a copy-on-write rewrite carries every row of the
+    *    rewritten file, changed or not — Delta CDF's
+    *    only-actually-changed-rows contract, so an SCD2 consumer sees no
+    *    spurious history versions); delta (dv) commits carry exactly the
+    *    rows the command touched and cancel nothing. Of what remains, a
+    *    key left with rows on both sides yields
+    *    update_preimage/update_postimage, pre-only rows are deletes and
+    *    post-only rows inserts — full CDF fidelity for SQL UPDATE and
+    *    MERGE INTO commits, and a duplicate or null key that carries an
+    *    unchanged row still reports its real changes. Without `keys` a
+    *    delta commit degrades to pre→update_preimage /
+    *    post→update_postimage for ALL carried rows, unchanged ones
+    *    included (a pure UPDATE is exactly that; pass the key for exact,
+    *    no-op-suppressed classification).
     *  - Rewrites that change NO logical rows (compact / compact_dv /
     *    alter / analyze) emit nothing — Delta's dataChange=false rule.
     *
     * SCALE: cost is O(changed data) per commit — added files, removed
     * files, and dv-TOUCHED files are read; untouched data never is. The
     * dv-entry and eq-key join build sides are changed-row-count sized
-    * (broadcastable); the key-pairing joins carry only the commit's own
-    * change set. One exception: an EQUALITY-delete commit's pre-images
-    * must probe the v-1 snapshot for the deleted keys (eq sidecars carry
-    * keys, not file positions), so such a commit costs one semi-join
-    * filtered scan of the table at v-1 — O(table), like Iceberg's eq-
-    * delete read amplification; dv/CoW commits stay O(changed). At 100 TB
-    * an incremental consumer pays for its deltas, not the table.
+    * (broadcastable), and the pairing is ONE shuffle of the commit's own
+    * pre and post rows by key (see [[pairByKey]]). One exception: an
+    * EQUALITY-delete commit's pre-images must probe the v-1 snapshot for
+    * the deleted keys (eq sidecars carry keys, not file positions), so
+    * such a commit costs one semi-join filtered scan of the table at v-1
+    * — O(table), like Iceberg's eq-delete read amplification; dv/CoW
+    * commits stay O(changed). At 100 TB an incremental consumer pays for
+    * its deltas, not the table. Commits materialized at commit time (see
+    * [[maybeMaterializeChanges]]) are not re-derived at all: a run of
+    * them in one schema era is one sidecar scan.
     *
     * WIDE WINDOWS: insert-only commits are batched into ONE scan per
     * `#schema=` era (rows version-stamped via a broadcast file→version
@@ -2484,22 +2511,31 @@ object TableLog {
 
   /** Commit-time change-data materialization (the Delta `_change_data`
     * writer role): when the committed snapshot's `#tblprop=` carries
-    * [[CdfProp]] and the commit is a genuine non-insert data change, the
-    * typed change rows are reconstructed ONCE — while the commit's pre
-    * and post file sets are both guaranteed retained — and written under
-    * [[ChangeDataDir]], hive-partitioned by `_commit_version`. Readers
-    * ([[changes]] and the streaming change feed) then serve the window
-    * with one scan per schema era, never re-deriving the same commit
-    * twice. Pure inserts are skipped: stamping added files is already
-    * O(1)-per-era via [[insertBatch]], so a sidecar would only duplicate
-    * the inserted bytes. A crash between the commit and the `_SUCCESS`
-    * marker is safe: the incomplete sidecar is invisible (no marker) and
-    * the version reconstructs on read like any unmaterialized commit.
+    * [[CdfProp]] and the commit is a genuine non-insert data change, its
+    * typed change rows are written ONCE under [[ChangeDataDir]],
+    * hive-partitioned by `_commit_version`. Readers ([[changes]] and the
+    * streaming change feed) then serve the window with one scan per
+    * schema era, never re-deriving the same commit twice.
+    *
+    * Where the rows come from: `own`, when the committing operation
+    * already holds them — a [[deleteWhereDv]] whose won commit's parent
+    * is its own snapshot writes the rows its scan matched (Delta writes a
+    * DML's change files from the DML's own rows the same way). Every
+    * other commit (upserts, copy-on-write and SQL row-level writes,
+    * equality deletes, restores, a delete that rebased) is reconstructed
+    * by [[changeRowsOf]] here, while its pre and post file sets are both
+    * guaranteed retained. Pure inserts are skipped: stamping added files
+    * is already O(1)-per-era via [[insertBatch]], so a sidecar would only
+    * duplicate the inserted bytes. A crash between the commit and the
+    * `_SUCCESS` marker is safe: the incomplete sidecar is invisible (no
+    * marker) and the version reconstructs on read like any
+    * unmaterialized commit.
     */
   private def maybeMaterializeChanges(spark: SparkSession, dir: String,
                                       v: Long, op: String,
                                       prev: Seq[String],
-                                      cur: Seq[String]): Unit = {
+                                      cur: Seq[String],
+                                      own: => Option[DataFrame]): Unit = {
     val props = metaProps(cur)
     if (!cdfEnabled(props) || isNoChangeOp(op)) return
     val curFiles = cur.filterNot(_.startsWith("#"))
@@ -2514,13 +2550,12 @@ object TableLog {
     val fs = fsOf(spark, dir)
     val target = changeDataVersionDir(dir, v)
     if (fs.exists(new Path(target, "_SUCCESS"))) return // idempotent
-    changeRowsOf(spark, dir, v, op, prev, cur, cdfKeys(props)).foreach { df =>
-      // _commit_version lives in the directory name; a reader re-derives
-      // it as a partition column (and the empty-change case writes just
-      // the marker — zero part files, zero rows served)
-      df.drop("_commit_version").write.mode("overwrite")
-        .parquet(target.toString)
-    }
+    // _commit_version lives in the directory name; a reader re-derives
+    // it as a partition column (and the empty-change case writes just
+    // the marker — zero part files, zero rows served)
+    own.orElse(changeRowsOf(spark, dir, v, op, prev, cur, cdfKeys(props))
+        .map(_.drop("_commit_version")))
+      .foreach(_.write.mode("overwrite").parquet(target.toString))
     if (!fs.exists(new Path(target, "_SUCCESS"))) {
       fs.mkdirs(target)
       fs.create(new Path(target, "_SUCCESS"), true).close()
@@ -2658,49 +2693,70 @@ object TableLog {
         Some(stamp(p, "update_preimage").unionByName(
           stamp(q, "update_postimage"), allowMissingColumns = true))
       case (Some(p), Some(q)) =>
-        // pair by key: INTERSECT is null-safe, so null-keyed rows pair too
-        val shared = p.select(keys.map(col): _*)
-          .intersect(q.select(keys.map(col): _*))
-          .select(keys.map(k => col(k).as(s"_ck_$k")): _*)
-        // Delta-CDF fidelity: a copy-on-write rewrite carries EVERY row
-        // of the rewritten file through pre and post — rows whose values
-        // did not change are not updates (a 1-row upsert into a 20-row
-        // file is 1 update pair, not 20). Suppress keys whose full row is
-        // identical on both sides (null-safe set intersect over all
-        // columns); they emit nothing, like Delta's change files. Both
-        // sides are commit-sized frames, so the extra intersect/except
-        // carries only the commit's own change set. ONLY rewrite commits
-        // (files removed) need it: a dv-delta commit's pre/post hold
-        // exactly the rows the command touched — Delta CDF emits those
-        // as-is, and the two set ops would cost a pure-delta window ~45%
-        // for nothing (measured on the cdc_dml gate). Known divergence
-        // from Delta CDF: suppression keys on VALUE change, not on the
-        // command-touched set — a genuine no-op UPDATE (SET v = v hitting
-        // a copy-on-write rewrite) emits nothing here, whereas Delta
-        // writes update_preimage/update_postimage for every matched row
-        // even when values are unchanged. We prefer the value-change
-        // contract (a consumer reacting to "changes" gets only changes);
-        // callers needing command-touched fidelity can read the pre/post
-        // frames of the commit directly. Also skipped when
-        // the two sides' column sets differ (schema changed mid-commit) —
-        // then "identical" is ill-defined and every pair stays an update.
-        val changedShared =
-          if (removedFiles.isEmpty ||
-            p.columns.sorted.toSeq != q.columns.sorted.toSeq) shared
-          else shared.except(
-            p.intersect(q.select(p.columns.map(col).toIndexedSeq: _*))
-              .select(keys.map(k => col(k).as(s"_ck_$k")): _*))
-        def cond(df: DataFrame) =
-          keys.map(k => df(k) <=> col(s"_ck_$k")).reduce(_ && _)
-        Some(Seq(
-          stamp(p.join(changedShared, cond(p), "left_semi"), "update_preimage"),
-          stamp(p.join(shared, cond(p), "left_anti"), "delete"),
-          stamp(q.join(changedShared, cond(q), "left_semi"), "update_postimage"),
-          stamp(q.join(shared, cond(q), "left_anti"), "insert"))
-          .reduce(_.unionByName(_, allowMissingColumns = true)))
+        // Delta-CDF fidelity: a copy-on-write rewrite carries EVERY row of
+        // the rewritten file through pre and post — rows whose values did
+        // not change are not updates (a 1-row upsert into a 20-row file is
+        // 1 update pair, not 20), so a rewrite commit cancels identical
+        // pre/post rows one for one. A dv-delta commit's pre/post hold
+        // exactly the rows the command touched, which Delta CDF emits
+        // as-is, so nothing cancels there; nor when the two sides' column
+        // sets differ (schema changed mid-commit, "identical" is
+        // ill-defined). Known divergence from Delta CDF: on a rewrite,
+        // suppression keys on VALUE change, not on the command-touched set
+        // — a no-op UPDATE (SET v = v) emits nothing here, where Delta
+        // writes a pre/post pair for every matched row. We prefer the
+        // value-change contract (a consumer reacting to "changes" gets
+        // only changes).
+        val cancel = removedFiles.nonEmpty &&
+          p.columns.sorted.toSeq == q.columns.sorted.toSeq
+        Some(pairByKey(p, q, keys, cancel)
+          .withColumn("_commit_version", lit(v)))
     }
   }
 
+  /** Label one commit's pre and post images by business key, in ONE keyed
+    * pass: both sides are signed (+1 pre, -1 post), unioned and
+    * repartitioned by `keys` once; every later step reuses that
+    * partitioning. With `cancel`, identical full rows net out one for one
+    * (a grouping over all columns, which the key partitioning already
+    * satisfies). Per key, what remains is labeled: pre rows are
+    * update_preimage when the key kept a post row, else delete; post rows
+    * are update_postimage when the key kept a pre row, else insert.
+    *
+    * Keys compare null-safely (a null key is one group), and suppression
+    * works per ROW, not per key: a duplicate or null key that carries an
+    * unchanged row still reports the key's real insert, delete or update.
+    * Both sides are commit-sized, so the one shuffle carries only the
+    * commit's own change set.
+    */
+  private def pairByKey(pre: DataFrame, post: DataFrame, keys: Seq[String],
+                        cancel: Boolean): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{abs, explode, max, min, sequence, sum, when}
+    val signed = pre.withColumn("_cdf_n", lit(1L))
+      .unionByName(post.withColumn("_cdf_n", lit(-1L)), allowMissingColumns = true)
+      .repartition(keys.map(col): _*)
+    val net =
+      if (!cancel) signed
+      else signed.groupBy(signed.columns.filterNot(_ == "_cdf_n").map(col).toIndexedSeq: _*)
+        .agg(sum(col("_cdf_n")).as("_cdf_n"))
+        .filter(col("_cdf_n") =!= 0)
+    val byKey = Window.partitionBy(keys.map(col): _*)
+    net.withColumn("_change_type",
+        when(col("_cdf_n") > 0,
+          when(min(col("_cdf_n")).over(byKey) < 0, "update_preimage")
+            .otherwise("delete"))
+          .otherwise(when(max(col("_cdf_n")).over(byKey) > 0, "update_postimage")
+            .otherwise("insert")))
+      .withColumn("_cdf_n", explode(sequence(lit(1L), abs(col("_cdf_n")))))
+      .drop("_cdf_n")
+  }
+
+  /** The table's commit history, newest first — `DESCRIBE HISTORY`:
+    * one row per retained version with its operation (`#op=` manifest
+    * metadata; pre-op manifests read as "write") and file count. A pure
+    * metadata read: manifests only, no data files touched.
+    */
   def history(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     // op/txn come from the version's own log file (one small read each);

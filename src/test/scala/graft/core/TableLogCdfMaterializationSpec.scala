@@ -128,4 +128,113 @@ class TableLogCdfMaterializationSpec extends SparkSpec {
     assert(feed.filter($"_change_type" === "delete")
       .select($"id").as[Long].collect().toSeq == Seq(1L))
   }
+
+  private def hideSuccessMarkers(dir: String): Unit = {
+    val cd = new Path(dir, TableLog.ChangeDataDir)
+    fs(dir).listStatus(cd).foreach { st =>
+      fs(dir).rename(new Path(st.getPath, "_SUCCESS"),
+        new Path(st.getPath, ".hidden_success"))
+    }
+  }
+
+  test("materialized change rows equal reconstructed ones over a mixed " +
+    "history: deletes of one key and across two files, a keyed upsert") {
+    val dir = freshDir("graft_cdf_eq")
+    TableLog.append(spark, dir, spark.range(0, 10)
+      .select($"id", ($"id" * 10).as("v"), lit("a").as("s")).coalesce(1))
+    TableLog.setTableProperties(spark, dir,
+      Map(TableLog.CdfProp -> "true", TableLog.CdfKeysProp -> "id"))
+    val v0 = TableLog.versions(spark, dir).last
+    TableLog.append(spark, dir, spark.range(10, 20)
+      .select($"id", ($"id" * 10).as("v"), lit("b").as("s")).coalesce(1))
+    TableLog.deleteWhereDv(spark, dir, $"id" === 3)
+    TableLog.deleteWhereDv(spark, dir, $"id".isin(5, 15))
+    // a no-op update (id 1 unchanged), a changed row (id 2), a new key
+    TableLog.upsert(spark, dir,
+      Seq((1L, 10L, "a"), (2L, 21L, "a"), (100L, 1000L, "n"))
+        .toDF("id", "v", "s"), Seq("id"))
+    // a delete after the rewrite, and an upsert into a dv-touched file
+    TableLog.deleteWhereDv(spark, dir, $"id".isin(2, 12))
+    TableLog.upsert(spark, dir,
+      Seq((16L, 161L, "b"), (101L, 1010L, "n")).toDF("id", "v", "s"),
+      Seq("id"))
+    val tip = TableLog.versions(spark, dir).last
+    assert(TableLog.materializedChangeVersions(spark, dir).keySet ==
+      ((v0 + 2) to tip).toSet)
+
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select($"id", $"v", $"s", $"_change_type", $"_commit_version")
+        .as[(Long, Long, String, String, Long)].collect().sorted.toSeq
+    val mat = rows(TableLog.changes(spark, dir, v0, tip, Seq("id")))
+    assert(mat.map(r => (r._1, r._4)).sorted == Seq(
+      (2L, "delete"), (2L, "update_postimage"), (2L, "update_preimage"),
+      (3L, "delete"), (5L, "delete"), (10L, "insert"), (11L, "insert"),
+      (12L, "delete"), (12L, "insert"), (13L, "insert"), (14L, "insert"),
+      (15L, "delete"), (15L, "insert"), (16L, "insert"),
+      (16L, "update_postimage"), (16L, "update_preimage"), (17L, "insert"),
+      (18L, "insert"), (19L, "insert"), (100L, "insert"), (101L, "insert")))
+    hideSuccessMarkers(dir)
+    assert(TableLog.materializedChangeVersions(spark, dir).isEmpty)
+    assert(rows(TableLog.changes(spark, dir, v0, tip, Seq("id"))) == mat)
+  }
+
+  test("a null-keyed insert beside an unchanged null-keyed row reaches " +
+    "the feed, materialized or reconstructed") {
+    for (cdf <- Seq(true, false)) {
+      val dir = freshDir("graft_cdf_nullkey")
+      TableLog.append(spark, dir,
+        Seq((Some(1L), "old"), (None, "five"), (Some(2L), "keep"))
+          .toDF("id", "s").coalesce(1))
+      TableLog.setTableProperties(spark, dir, Map(
+        TableLog.CdfProp -> cdf.toString, TableLog.CdfKeysProp -> "id"))
+      val v0 = TableLog.versions(spark, dir).last
+      TableLog.upsert(spark, dir,
+        Seq((Some(1L), "new"), (None, "seven")).toDF("id", "s"), Seq("id"))
+      val tip = TableLog.versions(spark, dir).last
+      assert(TableLog.read(spark, dir).filter($"id".isNull)
+        .select($"s").as[String].collect().sorted.toSeq == Seq("five", "seven"))
+      val feed = TableLog.changes(spark, dir, v0, tip, Seq("id"))
+        .select($"id", $"s", $"_change_type")
+        .as[(Option[Long], String, String)].collect().toSeq
+      assert(feed.sortBy(_._2) == Seq(
+        (Some(1L), "new", "update_postimage"),
+        (Some(1L), "old", "update_preimage"),
+        (None, "seven", "insert")), s"cdf=$cdf")
+    }
+  }
+
+  test("a commit's own change rows serve it only when its parent is the " +
+    "snapshot they were computed against") {
+    val rows = spark.range(1).toDF()
+    val own = TableLog.ownChanges(snapshot = 7L, rows)
+    assert(own(7L).contains(rows))
+    assert(own(8L).isEmpty) // rebased onto a racing writer's version
+    assert(own(6L).isEmpty)
+  }
+
+  test("a keyed rewrite pairs its pre and post images in one shuffle") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    def shuffles(p: SparkPlan): Int = p match {
+      case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
+      case q: QueryStageExec => shuffles(q.plan)
+      case e: ShuffleExchangeLike => 1 + e.children.map(shuffles).sum
+      case other => other.children.map(shuffles).sum
+    }
+    val dir = freshDir("graft_cdf_pair")
+    TableLog.append(spark, dir,
+      spark.range(0, 20).select($"id", $"id".as("v")).coalesce(1))
+    TableLog.deleteWhereDv(spark, dir, $"id" === 7)
+    TableLog.upsert(spark, dir,
+      Seq((1L, 1L), (2L, 20L), (50L, 50L)).toDF("id", "v"), Seq("id"))
+    val v = TableLog.versions(spark, dir).last
+    val feed = TableLog.changesOfVersion(spark, dir, v, Seq("id")).get
+    val rows = feed.select($"id", $"v", $"_change_type")
+      .as[(Long, Long, String)].collect().sorted.toSeq
+    assert(rows == Seq((2L, 2L, "update_preimage"),
+      (2L, 20L, "update_postimage"), (50L, 50L, "insert")))
+    assert(shuffles(feed.queryExecution.executedPlan) == 1,
+      feed.queryExecution.executedPlan.treeString)
+  }
 }
