@@ -56,10 +56,10 @@ import org.apache.spark.sql.functions.{col, lit}
   *    else carries into the new version untouched.
   *  - **Merge-on-read DELETE (deletion vectors)**: [[deleteWhereDv]]
   *    records (file, row-index) sidecars under `_graft_dv/` and touches
-  *    NO data file; [[read]] hides the rows via an anti-join on parquet
-  *    `_metadata.row_index`, rewrite paths read through the vectors (no
-  *    resurrection), [[compact]] materializes and retires them, and
-  *    [[vacuum]] reclaims unreferenced sidecars.
+  *    NO data file; [[read]] hides the rows with an in-scan filter on
+  *    parquet `_metadata.row_index`, rewrite paths read through the
+  *    vectors (no resurrection), [[compact]] materializes and retires
+  *    them, and [[vacuum]] reclaims unreferenced sidecars.
   *  - **Data skipping**: `append(statsCol=...)` records per-file min/max
   *    in the manifest (`#stats=` lines, carried forward with their
   *    files); a `read(...).where(...)` on that column drops files whose
@@ -877,11 +877,12 @@ object TableLog {
   }
 
   /** Rows of `files` as visible in the snapshot `lines` describe: its
-    * deletion vectors and equality deletes applied, projected to
-    * `logical` (see [[toLogical]]) with the `partCols` and the lineage
-    * columns `_dv_file` / `_dv_idx` passed through. The one scan every
-    * rewrite and change-feed path reads a file set through, so none of
-    * them resurrects a row the snapshot hides.
+    * deletion vectors filtered out inside the scan ([[applyDv]]) and its
+    * equality deletes applied, projected to `logical` (see [[toLogical]])
+    * with the `partCols` and the lineage columns `_dv_file` / `_dv_idx`
+    * passed through. The one scan every rewrite and change-feed path
+    * reads a file set through, so none of them resurrects a row the
+    * snapshot hides.
     */
   private def visibleRows(spark: SparkSession, dir: String,
                           files: Seq[String], lines: Seq[String],
@@ -893,21 +894,44 @@ object TableLog {
       lines), logical, passthrough = partCols ++ Seq("_dv_file", "_dv_idx"))
 
   /** Drop rows listed in the snapshot's deletion vectors (merge-on-read):
-    * an anti-join of the lineage-tagged scan against the union of the dv
-    * sidecars. No-op (and no plan overhead) when the manifest carries no
-    * dv lines. The dv side is deleted-row-count–sized, so the join
-    * broadcast-resolves under AQE for the selective deletes dvs exist
-    * for.
+    * a per-row filter over the lineage-tagged scan, which tests each
+    * (`_dv_file`, `_dv_idx`) against the map of deleted positions that
+    * the executor loads from the sidecars itself ([[dvSurvives]]). No
+    * job, no join, and no plan change when the manifest carries no dv
+    * lines.
     */
   private def applyDv(spark: SparkSession, dir: String,
                       tagged: DataFrame, dvs: Seq[String]): DataFrame =
-    if (dvs.isEmpty) tagged
-    else {
-      val dv = spark.read.schema(DvSidecarSchema)
-        .parquet(dvs.map(f => s"$dir/$f"): _*)
-        .select(col("_dv_file"), col("_dv_idx"))
-      tagged.join(dv, Seq("_dv_file", "_dv_idx"), "left_anti")
-    }
+    if (dvs.isEmpty) tagged else tagged.filter(dvSurvives(spark, dir, dvs))
+
+  /** True for a lineage-tagged row that no sidecar of `dvs` lists —
+    * [[graft.sources.DvLookup]], the one positional-delete test, which
+    * the catalog scan applies too. Only the qualified sidecar paths
+    * travel with the plan.
+    */
+  private def dvSurvives(spark: SparkSession, dir: String,
+                         dvs: Seq[String]): org.apache.spark.sql.Column = {
+    val qd = fsOf(spark, dir).makeQualified(new Path(dir)).toString
+    graft.sources.DvLookup.column(spark, dvs.map(f => s"$qd/$f"),
+      col("_dv_file"), col("_dv_idx"))
+  }
+
+  /** The part files Spark's writer staged under `relDir` (table-relative)
+    * with their row counts, minus the empty ones, which are deleted: the
+    * writer emits scan partition 0's part whether it holds rows or not,
+    * and every later reader would open it. Counts come from the footers
+    * (driver metadata, no job).
+    */
+  private def nonEmptyParts(spark: SparkSession, dir: String,
+                            relDir: String): Seq[(String, Long)] = {
+    val fs = fsOf(spark, dir)
+    val (kept, empty) = fs.listStatus(new Path(dir, relDir)).toSeq
+      .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
+      .map(s => (s"$relDir/${s.getPath.getName}", footerOf(spark, s.getPath).rows))
+      .partition(_._2 > 0)
+    empty.foreach { case (f, _) => fs.delete(new Path(dir, f), false) }
+    kept
+  }
 
   /** Whole-segment hive-partition match: `market=2/et=1/f` satisfies
     * (market,2) and (et,1), and nothing else — substring matching once
@@ -1515,8 +1539,9 @@ object TableLog {
     * Spark's planner hands the query's own WHERE conjuncts to the index,
     * which answers partition pruning (hive path segments, hidden-layout
     * transforms) and min/max data skipping (`#stats=` lines) from the
-    * manifest alone, before a footer is opened. Deletion vectors and
-    * equality deletes apply through the file's row lineage; the result
+    * manifest alone, before a footer is opened. Deletion vectors filter
+    * rows inside the scan by their lineage (file, row index), and
+    * equality deletes anti-join on their keys; the result
     * carries the snapshot's logical schema (renames, drops, adds) with
     * hive partition columns appended. The same index backs the SQL
     * catalog ([[graft.sources.GraftCatalog]]).
@@ -1680,17 +1705,14 @@ object TableLog {
     val dvDir = s"$DvDir/$commitId-rewrite"
     surviving.write.parquet(s"$dir/$dvDir")
     val fs = fsOf(spark, dir)
-    val written = fs.listStatus(new Path(dir, dvDir)).toSeq
-      .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-      .map(s => s"$dvDir/${s.getPath.getName}")
     // count from the just-written footers (driver metadata, no job)
-    val after = footerRowCount(spark, written.map(f => new Path(dir, f)))
-    val fresh = if (after == 0) Seq.empty else written
+    val fresh = nonEmptyParts(spark, dir, dvDir)
+    val after = fresh.map(_._2).sum
     if (after == 0) fs.delete(new Path(dir, dvDir), true)
     val v = try {
       commit(spark, dir, identity[Seq[String]],
         mkDv = tipDv => tipDv.filterNot(readLines) ++
-          fresh.map(f => s"#dvp=$f"),
+          fresh.map(p => s"#dvp=${p._1}"),
         op = "compact_dv").get
     } catch {
       case e: java.util.ConcurrentModificationException =>
@@ -1733,7 +1755,7 @@ object TableLog {
     val lines = manifestLines(spark, dir, tip)
     val all = lines.filterNot(_.startsWith("#"))
     // visible snapshot with row lineage: `_dv_file` (not input_file_name,
-    // which loses meaning after the dv anti-join) names each row's file;
+    // which loses meaning after a join) names each row's file;
     // LOGICAL names, so the caller's predicate resolves post-rename
     def visible(fl: Seq[String]) =
       visibleRows(spark, dir, fl, lines, metaSchema(lines), pathPartCols(all))
@@ -1789,13 +1811,15 @@ object TableLog {
     * matching rows are recorded as (file, row-index) entries in a parquet
     * sidecar under `_graft_dv/`, referenced by a `#dvp=` manifest line;
     * every data file carries into the new version UNTOUCHED. [[read]]
-    * hides dv-listed rows with an anti-join; [[compact]] materializes the
+    * hides dv-listed rows with a per-row filter inside the scan; only
+    * non-empty sidecar parts are listed. [[compact]] materializes the
     * deletes and clears the vectors.
     *
     * This is the Delta/Iceberg deletion-vector trade: a selective delete
     * on a 100 TB table touches kilobytes of sidecar instead of rewriting
-    * every file that holds a matching row, at the price of a per-read
-    * anti-join whose build side is the deleted-row count. Use
+    * every file that holds a matching row, at the price of a per-row
+    * position lookup on reads of the snapshot, against a map each
+    * executor loads once per sidecar. Use
     * [[deleteWhere]] (copy-on-write) when deleting a large fraction;
     * [[compact]] (or any rewrite of the file) retires the entries.
     *
@@ -1827,12 +1851,10 @@ object TableLog {
       val dvDir = s"$DvDir/$commitId"
       matched.select(col("_dv_file"), col("_dv_idx")).write.parquet(s"$dir/$dvDir")
       val fs = fsOf(spark, dir)
-      val freshDv = fs.listStatus(new Path(dir, dvDir)).toSeq
-        .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-        .map(s => s"$dvDir/${s.getPath.getName}")
       // row count from the written sidecars' FOOTERS — driver metadata, no
       // job, no second evaluation of the predicate
-      val nDeleted = footerRowCount(spark, freshDv.map(f => new Path(dir, f)))
+      val freshDv = nonEmptyParts(spark, dir, dvDir)
+      val nDeleted = freshDv.map(_._2).sum
       if (nDeleted == 0) {
         fs.delete(new Path(dir, dvDir), true)
         return (tip, 0L)
@@ -1847,7 +1869,7 @@ object TableLog {
             guard(base)
             base
           },
-          mkDv = tipDv => tipDv ++ freshDv.map(f => s"#dvp=$f"),
+          mkDv = tipDv => tipDv ++ freshDv.map(p => s"#dvp=${p._1}"),
           op = "delete_dv",
           ownChangeRows = ownChanges(tip, matched.drop("_dv_file", "_dv_idx")
             .withColumn("_change_type", lit("delete"))))
@@ -1952,7 +1974,7 @@ object TableLog {
     val lines = manifestLines(spark, dir, tip)
     val all = lines.filterNot(_.startsWith("#"))
     // lineage (`_dv_file` from parquet _metadata) instead of
-    // input_file_name: survives the dv anti-join AND the key semi-join;
+    // input_file_name: survives the key semi-join;
     // LOGICAL names, so `updates`' key columns resolve post-rename
     def visible(fl: Seq[String]) =
       visibleRows(spark, dir, fl, lines, metaSchema(lines), pathPartCols(all))
@@ -2555,7 +2577,10 @@ object TableLog {
     // the marker — zero part files, zero rows served)
     own.orElse(changeRowsOf(spark, dir, v, op, prev, cur, cdfKeys(props))
         .map(_.drop("_commit_version")))
-      .foreach(_.write.mode("overwrite").parquet(target.toString))
+      .foreach { rows =>
+        rows.write.mode("overwrite").parquet(target.toString)
+        nonEmptyParts(spark, dir, s"$ChangeDataDir/${target.getName}")
+      }
     if (!fs.exists(new Path(target, "_SUCCESS"))) {
       fs.mkdirs(target)
       fs.create(new Path(target, "_SUCCESS"), true).close()
@@ -2642,19 +2667,19 @@ object TableLog {
     // pre (b): rows the commit's NEW dv entries hide — read ONLY the
     // dv-touched files (a driver-sized census of the new sidecars), with
     // v-1's own deletes subtracted first so a double-listed position
-    // cannot produce a phantom pre-image
+    // cannot produce a phantom pre-image; the new entries then select
+    // through the same in-scan lookup, inverted
     val preDv: Option[DataFrame] =
       if (newDvSidecars.isEmpty) None
       else {
-        val entries = spark.read.schema(DvSidecarSchema)
+        val touched = spark.read.schema(DvSidecarSchema)
           .parquet(newDvSidecars.map(f => s"$dir/$f"): _*)
-          .select(col("_dv_file"), col("_dv_idx"))
-        val touched = entries.select("_dv_file").distinct()
+          .select("_dv_file").distinct()
           .collect().map(_.getString(0)).toSeq
           .filter(prevFiles.toSet) // positions only bind to v-1 files
         if (touched.isEmpty) None
         else Some(visibleRows(spark, dir, touched, prev, ms, partCols)
-          .join(entries, Seq("_dv_file", "_dv_idx"), "left_semi")
+          .filter(!dvSurvives(spark, dir, newDvSidecars))
           .drop("_dv_file", "_dv_idx"))
       }
 

@@ -1,13 +1,11 @@
 package graft.sources
 
-import java.util.concurrent.ConcurrentHashMap
-
 import scala.collection.mutable
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, UnsafeProjection}
 import org.apache.spark.sql.connector.read.{
@@ -17,6 +15,7 @@ import org.apache.spark.sql.connector.read.{
 import org.apache.spark.sql.execution.datasources.{FilePartition, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetScan, ParquetScanBuilder}
+import org.apache.spark.sql.functions.udf
 import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -41,8 +40,9 @@ private[sources] class SerializableHadoopConf(
   }
 }
 
-/** Merge-on-read through the DSv2 front door: the scan-level twin of the
-  * anti-joins `TableLog.read` composes (reference surface:
+/** Merge-on-read through the DSv2 front door, applying deletion vectors
+  * through the same executor-side [[DvLookup]] `TableLog.read` filters
+  * with (reference surface:
   * `spark.table(...)` everywhere, /root/reference/src/utils/
   * silver_transformations.py:43 — a user must not lose SQL access to a
   * table the moment someone runs a GDPR delete on it).
@@ -73,8 +73,8 @@ private[sources] class SerializableHadoopConf(
   * driver: the driver ships only their paths (plus the eq-delete key
   * sets, which are external-key-list sized) in ONE broadcast per
   * snapshot — cached across scans, so repeated MoR queries in a session
-  * reuse a single broadcast — and each EXECUTOR loads the (file → deleted
-  * row indexes) map once per snapshot from the sidecar parquet
+  * reuse a single broadcast — and each EXECUTOR reads each sidecar once
+  * and merges a snapshot's (file → deleted row indexes) map once
   * ([[MorDvCache]]), the Delta/Iceberg geometry. Both delete families are
   * capped at [[MaxEntries]] (10M — past that the table needs OPTIMIZE,
   * and the error says so). The read-side cost is a row-based
@@ -213,39 +213,128 @@ object GraftMorScan {
   }
 }
 
-/** Executor-side per-JVM deletion-vector cache: the (data file → sorted
-  * deleted row indexes) map is loaded ONCE per snapshot per executor from
-  * the sidecar parquet files — there is no SparkSession on executors, so
-  * the read goes through parquet-hadoop's example API. Sidecar bytes are
-  * deleted-row-count sized; the cache is LRU-bounded so long-lived
-  * executors touching many MoR snapshots don't hoard heap.
+/** The one deletion-vector test of this format, applied inside the scan
+  * by both read paths: [[graft.core.TableLog]] filters lineage-tagged
+  * rows through [[DvLookup.column]], and [[GraftMorReaderFactory]] asks
+  * [[positions]] once per file. Only the snapshot's qualified sidecar
+  * paths and the session's Hadoop conf broadcast travel with the plan;
+  * each task takes the (data file → deleted row positions) map from the
+  * executor's [[MorDvCache]] on first use.
   */
-private[sources] object MorDvCache {
-  private val cache = new ConcurrentHashMap[String, Map[String, Array[Long]]]()
+private[graft] class DvLookup(sidecars: Array[String],
+                              confB: Broadcast[SerializableHadoopConf])
+  extends Serializable {
 
-  def get(sidecars: Array[String], conf: Configuration): Map[String, Array[Long]] = {
-    if (cache.size > 8) cache.clear()
-    cache.computeIfAbsent(sidecars.mkString("\n"), _ => load(sidecars, conf))
+  @transient private lazy val byFile: Map[String, Array[Long]] =
+    MorDvCache.get(sidecars, confB.value.value)
+
+  /** Sorted deleted row positions of manifest-relative `file`. */
+  def positions(file: String): Array[Long] =
+    byFile.getOrElse(file, Array.emptyLongArray)
+
+  /** Is row `idx` of `file` visible in the snapshot? */
+  def survives(file: String, idx: Long): Boolean =
+    !DvLookup.hides(positions(file), idx)
+}
+
+private[graft] object DvLookup {
+
+  def hides(positions: Array[Long], idx: Long): Boolean =
+    positions.nonEmpty && java.util.Arrays.binarySearch(positions, idx) >= 0
+
+  def apply(spark: SparkSession, sidecars: Seq[String]): DvLookup =
+    new DvLookup(sidecars.toArray, GraftMorScan.hadoopConfBroadcast(spark))
+
+  /** True for a row of lineage (`file`, `idx`) — manifest-relative data
+    * file, parquet row index — that no sidecar of `sidecars` (qualified
+    * paths) lists.
+    */
+  def column(spark: SparkSession, sidecars: Seq[String],
+             file: Column, idx: Column): Column = {
+    val dv = DvLookup(spark, sidecars)
+    udf((f: String, i: Long) => dv.survives(f, i)).apply(file, idx)
+  }
+}
+
+/** Executor-side per-JVM deletion-vector cache. Sidecar files are
+  * immutable, so each one's (data file → sorted deleted row positions)
+  * map is read once per JVM, keyed on its path: a snapshot one delete
+  * newer than a cached one opens only that delete's sidecars. There is no
+  * SparkSession on executors, so the read goes through parquet-hadoop's
+  * example API. A multi-sidecar snapshot's merged map is also built once
+  * per JVM. Both caches are LRU-bounded by the entries they hold, at
+  * [[GraftMorScan.MaxEntries]] each, so long-lived executors don't hoard
+  * heap. Loads serialize on the object, so concurrent tasks of one
+  * snapshot wait for one load instead of repeating it.
+  */
+private[graft] object MorDvCache {
+  private type Entries = Map[String, Array[Long]]
+
+  /** Access-ordered map whose eldest values go once the entries held
+    * exceed [[GraftMorScan.MaxEntries]]; the newest value always stays.
+    */
+  private final class EntryLru {
+    private val m =
+      new java.util.LinkedHashMap[String, (Entries, Long)](16, 0.75f, true)
+    private var held = 0L
+
+    def get(k: String): Option[Entries] = Option(m.get(k)).map(_._1)
+
+    def put(k: String, e: Entries): Entries = {
+      val n = e.valuesIterator.map(_.length.toLong).sum
+      Option(m.put(k, (e, n))).foreach(old => held -= old._2)
+      held += n
+      val it = m.entrySet.iterator
+      while (held > GraftMorScan.MaxEntries && m.size > 1) {
+        val eldest = it.next()
+        held -= eldest.getValue._2
+        it.remove()
+      }
+      e
+    }
   }
 
-  private def load(sidecars: Array[String],
-                   conf: Configuration): Map[String, Array[Long]] = {
+  private val bySidecar = new EntryLru
+  private val bySnapshot = new EntryLru
+  private val loads = new java.util.concurrent.atomic.AtomicLong
+
+  /** Sidecar files read from storage by this JVM so far. */
+  def sidecarLoads: Long = loads.get
+
+  def get(sidecars: Array[String], conf: Configuration): Entries = synchronized {
+    if (sidecars.length == 1) sidecar(sidecars(0), conf)
+    else {
+      val key = sidecars.mkString("\n")
+      bySnapshot.get(key).getOrElse(
+        bySnapshot.put(key, merge(sidecars.map(sidecar(_, conf)))))
+    }
+  }
+
+  private def sidecar(path: String, conf: Configuration): Entries =
+    bySidecar.get(path).getOrElse(bySidecar.put(path, load(path, conf)))
+
+  private def merge(maps: Seq[Entries]): Entries =
+    maps.flatMap(_.toSeq).groupBy(_._1).map {
+      case (f, Seq((_, one))) => f -> one
+      case (f, several) => f -> several.flatMap(_._2).distinct.sorted.toArray
+    }
+
+  private def load(path: String, conf: Configuration): Entries = {
     import org.apache.parquet.hadoop.ParquetReader
     import org.apache.parquet.hadoop.example.GroupReadSupport
+    loads.incrementAndGet()
     val buf = mutable.HashMap.empty[String, mutable.ArrayBuffer[Long]]
-    sidecars.foreach { p =>
-      val reader = ParquetReader
-        .builder(new GroupReadSupport(), new org.apache.hadoop.fs.Path(p))
-        .withConf(conf).build()
-      try {
-        var g = reader.read()
-        while (g != null) {
-          buf.getOrElseUpdate(g.getString("_dv_file", 0),
-            mutable.ArrayBuffer.empty[Long]) += g.getLong("_dv_idx", 0)
-          g = reader.read()
-        }
-      } finally reader.close()
-    }
+    val reader = ParquetReader
+      .builder(new GroupReadSupport(), new org.apache.hadoop.fs.Path(path))
+      .withConf(conf).build()
+    try {
+      var g = reader.read()
+      while (g != null) {
+        buf.getOrElseUpdate(g.getString("_dv_file", 0),
+          mutable.ArrayBuffer.empty[Long]) += g.getLong("_dv_idx", 0)
+        g = reader.read()
+      }
+    } finally reader.close()
     buf.map { case (f, idxs) => f -> idxs.distinct.sorted.toArray }.toMap
   }
 }
@@ -350,7 +439,7 @@ class GraftMorScanBuilder(spark: SparkSession,
     }.toArray
     new GraftMorScanImpl(pScan, declared, innerRow,
       outOrdinals, rowIdxOrd, qualifiedDir, deletes,
-      GraftMorScan.hadoopConfBroadcast(spark), eqBound)
+      DvLookup(spark, deletes.value.dvSidecars.toSeq), eqBound)
   }
 }
 
@@ -365,7 +454,7 @@ private[sources] class GraftMorScanImpl(
     innerRow: StructType, outOrdinals: Array[Int], rowIdxOrd: Int,
     qualifiedDir: String,
     deletes: Broadcast[GraftMorScan.MorDeletes],
-    confB: Broadcast[SerializableHadoopConf],
+    dv: DvLookup,
     eqBound: Array[(Array[Int], Array[DataType])])
   extends Scan with Batch with SupportsReportStatistics {
 
@@ -417,21 +506,22 @@ private[sources] class GraftMorScanImpl(
 
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftMorReaderFactory(inner.createReaderFactory(), innerRow,
-      outOrdinals, rowIdxOrd, qualifiedDir, deletes, confB, eqBound,
+      outOrdinals, rowIdxOrd, qualifiedDir, deletes, dv, eqBound,
       columnarOk)
 }
 
 /** Row-based reader wrapper: chains one stock parquet reader per file in
   * the (possibly multi-file) partition, drops dv/eq-deleted rows, and
   * projects the internal extras (row index, re-added key columns) back
-  * out. The dv map resolves per file from the executor-side
-  * [[MorDvCache]] — the driver never materializes dv entries.
+  * out. Each file's deleted positions come from [[DvLookup]], the same
+  * executor-side test the API read path filters through — the driver
+  * never materializes dv entries.
   */
 private[sources] class GraftMorReaderFactory(
     inner: PartitionReaderFactory, innerRow: StructType,
     outOrdinals: Array[Int], rowIdxOrd: Int, qualifiedDir: String,
     deletes: Broadcast[GraftMorScan.MorDeletes],
-    confB: Broadcast[SerializableHadoopConf],
+    dv: DvLookup,
     eqBound: Array[(Array[Int], Array[DataType])],
     columnarOk: Boolean = false)
   extends PartitionReaderFactory {
@@ -467,9 +557,6 @@ private[sources] class GraftMorReaderFactory(
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val fp = partition.asInstanceOf[FilePartition]
     val del = deletes.value
-    val dvMap: Map[String, Array[Long]] =
-      if (del.dvSidecars.isEmpty) Map.empty
-      else MorDvCache.get(del.dvSidecars, confB.value.value)
     val eqSets: Array[(Array[Int], Array[DataType], Set[Seq[Any]])] =
       eqBound.zip(del.eq).map { case ((ords, types), (_, keys)) =>
         (ords, types, keys)
@@ -500,7 +587,8 @@ private[sources] class GraftMorReaderFactory(
         fi += 1
         val rel = f.toPath.toUri.getPath
           .stripPrefix(qualifiedDir).stripPrefix("/")
-        deleted = dvMap.getOrElse(rel, Array.emptyLongArray)
+        deleted =
+          if (del.dvSidecars.isEmpty) Array.emptyLongArray else dv.positions(rel)
         fileRow.update(0,
           org.apache.spark.unsafe.types.UTF8String.fromString(rel))
         delegate = inner.createReader(FilePartition(fp.index, Array(f)))
@@ -508,8 +596,7 @@ private[sources] class GraftMorReaderFactory(
       }
 
       private def survives(r: InternalRow): Boolean = {
-        if (deleted.nonEmpty && rowIdxOrd >= 0 &&
-          java.util.Arrays.binarySearch(deleted, r.getLong(rowIdxOrd)) >= 0)
+        if (rowIdxOrd >= 0 && DvLookup.hides(deleted, r.getLong(rowIdxOrd)))
           return false
         var i = 0
         while (i < eqSets.length) {

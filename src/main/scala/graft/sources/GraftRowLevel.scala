@@ -20,7 +20,7 @@ import org.apache.spark.sql.connector.write.{
   WriterCommitMessage}
 import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -124,14 +124,6 @@ private[sources] object ParquetSideWriter {
     ParquetSideWriter(factory, new SerializableHadoopConf(job.getConfiguration),
       ext, schema)
   }
-
-  /** `_dv_file`/`_dv_idx` — the [[graft.core.TableLog.deleteWhereDv]]
-    * sidecar schema, byte-compatible with what [[MorDvCache]] and the
-    * API path's anti-join read.
-    */
-  val DvSchema: StructType = StructType(Seq(
-    StructField("_dv_file", StringType, nullable = false),
-    StructField("_dv_idx", LongType, nullable = false)))
 }
 
 class GraftDeltaWrite(spark: SparkSession, dir: String,
@@ -188,7 +180,7 @@ class GraftDeltaBatchWrite(spark: SparkSession, dir: String,
       new IllegalStateException("delta write without a row-ID schema"))
     new GraftDeltaWriterFactory(qualifiedDir, commitId,
       ParquetSideWriter.prepare(spark, physDataSchema),
-      ParquetSideWriter.prepare(spark, ParquetSideWriter.DvSchema),
+      ParquetSideWriter.prepare(spark, graft.core.TableLog.DvSidecarSchema),
       rowSchema, dataFields.map(_._2), spec.partCols, partOrds,
       idSchema.fieldIndex(GraftLineage.FileCol),
       idSchema.fieldIndex(GraftLineage.PosCol),

@@ -185,4 +185,122 @@ class TableLogDvSpec extends SparkSpec {
       .select("operation", "n_files").as[(String, Int)].collect()
     assert(h.head == (("delete_dv", filesBefore)))
   }
+
+  /** Spark jobs `body` runs, counted through a job group: job events
+    * reach the status tracker through the listener bus, so the count is
+    * read once it stops changing.
+    */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val g = s"dv-jobs-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(g, g)
+    try body finally sc.clearJobGroup()
+    def n = sc.statusTracker.getJobIdsForGroup(g).length
+    var last = -1
+    var cur = n
+    while (cur != last) { last = cur; Thread.sleep(300); cur = n }
+    cur
+  }
+
+  private def joins(p: org.apache.spark.sql.execution.SparkPlan): Seq[String] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    p match {
+      case a: AdaptiveSparkPlanExec => joins(a.executedPlan)
+      case q: QueryStageExec => joins(q.plan)
+      case other =>
+        other.children.flatMap(joins) ++
+          Seq(other.nodeName).filter(_.toLowerCase.contains("join"))
+    }
+  }
+
+  test("a read of a dv snapshot is one job whose plan has no join") {
+    val dir = freshDir()
+    TableLog.append(spark, dir, spark.range(0, 200).select($"id"))
+    TableLog.deleteWhereDv(spark, dir, col("id") % 10 === 0)
+    TableLog.deleteWhereDv(spark, dir, col("id") === 51)
+    val df = TableLog.read(spark, dir)
+    var ids = Array.empty[Long]
+    assert(jobsOf { ids = df.select("id").as[Long].collect() } == 1)
+    assert(ids.length == 179 && !ids.contains(0L) && !ids.contains(51L))
+    assert(joins(df.queryExecution.executedPlan).isEmpty,
+      df.queryExecution.executedPlan.treeString)
+  }
+
+  test("reading snapshot k after k single-row dv deletes loads only the " +
+    "k-th sidecar") {
+    val dir = freshDir()
+    TableLog.append(spark, dir, spark.range(0, 50).select($"id"))
+    (1 to 5).foreach { k =>
+      TableLog.deleteWhereDv(spark, dir, col("id") === k)
+      val before = graft.sources.MorDvCache.sidecarLoads
+      assert(TableLog.read(spark, dir).count() == 50 - k)
+      assert(graft.sources.MorDvCache.sidecarLoads - before == 1,
+        s"snapshot $k re-read older sidecars")
+    }
+  }
+
+  test("a one-row delete outside scan partition 0 leaves one sidecar part " +
+    "and one change-data part") {
+    val dir = freshDir()
+    // two files of different sizes: the larger plans into scan partition
+    // 0, so the deleted row (in the smaller) lands in partition 1
+    TableLog.append(spark, dir,
+      spark.range(0, 500).select($"id", ($"id" * 3).as("v")).coalesce(1))
+    TableLog.append(spark, dir,
+      spark.range(1000, 1002).select($"id", ($"id" * 3).as("v")).coalesce(1))
+    TableLog.setTableProperties(spark, dir,
+      Map(TableLog.CdfProp -> "true", TableLog.CdfKeysProp -> "id"))
+    val (v, n) = TableLog.deleteWhereDv(spark, dir, col("id") === 1001)
+    assert(n == 1)
+    def parts(rel: String): Seq[String] = {
+      def walk(f: java.io.File): Seq[String] =
+        if (f.isFile) Seq(f.getName).filter(_.startsWith("part-"))
+        else f.listFiles.toSeq.flatMap(walk)
+      walk(new java.io.File(dir, rel))
+    }
+    val dvp = TableLog.manifestLines(spark, dir, v).filter(_.startsWith("#dvp="))
+    assert(dvp.size == 1, dvp)
+    assert(parts("_graft_dv").size == 1)
+    assert(parts(s"${TableLog.ChangeDataDir}/_commit_version=$v").size == 1)
+    assert(TableLog.read(spark, dir).count() == 501)
+    assert(TableLog.changes(spark, dir, v - 1, v, Seq("id"))
+      .select($"id", $"_change_type").as[(Long, String)].collect().toSeq ==
+      Seq((1001L, "delete")))
+  }
+
+  test("dv deletes, a copy-on-write delete, an upsert and a restore: the " +
+    "API read, the catalog read and a model agree at every version") {
+    val dir = freshDir()
+    TableLog.append(spark, dir,
+      spark.range(0, 20).select($"id", ($"id" * 10).as("v")).coalesce(1))
+    TableLog.append(spark, dir,
+      spark.range(20, 40).select($"id", ($"id" * 10).as("v")).coalesce(1))
+    var model = (0L until 40L).map(i => i -> i * 10).toMap
+    def check(step: String): Unit = {
+      val want = model.toSeq.sorted
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select($"id", $"v").as[(Long, Long)].collect().sorted.toSeq
+      assert(rows(TableLog.read(spark, dir)) == want, s"API read after $step")
+      assert(rows(spark.read.format("graft").load(dir)) == want,
+        s"catalog read after $step")
+    }
+    TableLog.deleteWhereDv(spark, dir, col("id") === 3)
+    model -= 3L
+    check("a dv delete")
+    TableLog.deleteWhereDv(spark, dir, col("id").isin(7, 25)) // same file again
+    model --= Seq(7L, 25L)
+    check("a second dv delete in the same file")
+    val afterDv = model
+    val vDv = TableLog.versions(spark, dir).last
+    TableLog.deleteWhere(spark, dir, col("id") === 10) // rewrites the dv file
+    model -= 10L
+    check("a copy-on-write delete")
+    TableLog.upsert(spark, dir,
+      Seq((12L, 121L), (30L, 301L), (100L, 1000L)).toDF("id", "v"), Seq("id"))
+    model ++= Seq(12L -> 121L, 30L -> 301L, 100L -> 1000L)
+    check("an upsert")
+    TableLog.restore(spark, dir, vDv)
+    model = afterDv
+    check("a restore")
+  }
 }
