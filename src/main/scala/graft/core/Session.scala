@@ -1,5 +1,9 @@
 package graft.core
 
+import java.net.URI
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -37,6 +41,21 @@ object Session {
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
   )
 
+  /** The `file://` filesystem of graft sessions ([[GraftLocalFileSystem]]
+    * and its `FileContext` twin): Hadoop's local filesystem without a
+    * `chmod` process per file and directory written.
+    */
+  private[core] val localFsConfs: Map[String, String] = Map(
+    "fs.file.impl" -> classOf[GraftLocalFileSystem].getName,
+    "fs.AbstractFileSystem.file.impl" -> classOf[GraftLocalFs].getName,
+  )
+  /** Hadoop's own values of those keys, the only ones [[install]]
+    * replaces: a conf naming any other class keeps it.
+    */
+  private val hadoopLocalFs = Map(
+    "fs.file.impl" -> "",
+    "fs.AbstractFileSystem.file.impl" -> "org.apache.hadoop.fs.local.LocalFs")
+
   /** Whole-plan extensions: the as-of join operator, its pushdown/pruning
     * rules, and runtime source-key pruning for MERGE targets.
     */
@@ -59,7 +78,8 @@ object Session {
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")
-    (commonConfs ++ extra).foreach { case (k, v) => b.config(k, v) }
+    val hadoopConfs = localFsConfs.map { case (k, v) => s"spark.hadoop.$k" -> v }
+    (commonConfs ++ hadoopConfs ++ extra).foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     install(spark)
@@ -74,11 +94,17 @@ object Session {
   }
 
   /** Idempotently install the native functions, strategies and optimizer
-    * rules on a live session. A session built outside graft has already
-    * read `spark.sql.extensions`, so the function registry and
-    * `experimental.*` are the public runtime routes.
+    * rules and the `file://` filesystem on a live session. A session built
+    * outside graft has already read `spark.sql.extensions`, so the
+    * function registry and `experimental.*` are the public runtime routes.
     */
   def install(spark: SparkSession): SparkSession = synchronized {
+    // direct `FileSystem.get` callers pass the context's conf; every
+    // `newHadoopConf()` copy, and so every task's conf, starts from the
+    // shared state's
+    Seq(spark.sparkContext.hadoopConfiguration,
+      org.apache.spark.sql.graftshim.GraftShim.sharedHadoopConf(spark)).foreach(useLocalFs(_))
+    evictStockLocalFs(spark.sparkContext.hadoopConfiguration)
     val registry = spark.sessionState.functionRegistry
     graft.functions.GraftFunctions.functions.foreach { case (ident, info, builder) =>
       if (!registry.functionExists(ident))
@@ -89,6 +115,26 @@ object Session {
     ex.extraOptimizations ++= optimizerRules.filterNot(ex.extraOptimizations.contains)
     spark
   }
+
+  private def useLocalFs(conf: Configuration): Unit =
+    localFsConfs.foreach { case (k, v) =>
+      if (Option(conf.get(k)).forall(_ == hadoopLocalFs(k))) conf.set(k, v)
+    }
+
+  /** Hadoop caches one `file://` filesystem per user, whatever conf later
+    * asks for it. One created before [[install]] (a session built outside
+    * graft makes one for its warehouse) is Hadoop's default class and
+    * would serve every later `FileSystem.get`. Closing it drops it from
+    * the cache. Closing also runs its delete-on-exit set, which nothing
+    * here fills: in Spark only Hive's insert staging registers paths, and
+    * graft sessions run without Hive. Holders of the closed instance can
+    * keep using it.
+    */
+  private def evictStockLocalFs(conf: Configuration): Unit =
+    if (conf.get("fs.file.impl") == localFsConfs("fs.file.impl")) {
+      val cached = FileSystem.get(URI.create("file:///"), conf)
+      if (!cached.isInstanceOf[GraftLocalFileSystem]) cached.close()
+    }
 
   /** The same extensions for the build-time `spark.sql.extensions` route. */
   def inject(ext: SparkSessionExtensions): Unit = {

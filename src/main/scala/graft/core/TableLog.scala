@@ -442,8 +442,8 @@ object TableLog {
         size > FooterCacheMax
     })
 
-  private def footerOf(spark: SparkSession, p: Path): FooterMeta = {
-    val conf = spark.sessionState.newHadoopConf()
+  /** `p`'s footer; `conf` is one `newHadoopConf()` copy per batch of files. */
+  private def footerOf(conf: org.apache.hadoop.conf.Configuration, p: Path): FooterMeta = {
     val st = p.getFileSystem(conf).getFileStatus(p)
     val key = (p.toString, st.getLen, st.getModificationTime)
     Option(footerCache.get(key)).getOrElse {
@@ -516,8 +516,10 @@ object TableLog {
   }
 
   /** Total rows across parquet files, from footers alone — no job. */
-  private def footerRowCount(spark: SparkSession, paths: Seq[Path]): Long =
-    paths.map(footerOf(spark, _).rows).sum
+  private def footerRowCount(spark: SparkSession, paths: Seq[Path]): Long = {
+    val conf = spark.sessionState.newHadoopConf()
+    paths.map(footerOf(conf, _).rows).sum
+  }
 
   /** The merged Spark schema of `files` (table-relative under `dir`) from
     * their footers' writer-stamped catalyst schemas, [[lenientMerge]]d on
@@ -532,8 +534,9 @@ object TableLog {
   private[graft] def footerMergedSchema(spark: SparkSession, dir: String,
                                         files: Seq[String], strict: Boolean)
       : org.apache.spark.sql.types.StructType = {
+    val conf = spark.sessionState.newHadoopConf()
     val schemas = files.map { f =>
-      footerOf(spark, new Path(dir, f)).schema.getOrElse(
+      footerOf(conf, new Path(dir, f)).schema.getOrElse(
         throw new IllegalStateException(s"$dir/$f has no Spark schema in " +
           s"its parquet footer (key $SparkSchemaKey): not a file this " +
           "table format wrote"))
@@ -925,9 +928,10 @@ object TableLog {
   private def nonEmptyParts(spark: SparkSession, dir: String,
                             relDir: String): Seq[(String, Long)] = {
     val fs = fsOf(spark, dir)
+    val conf = spark.sessionState.newHadoopConf()
     val (kept, empty) = fs.listStatus(new Path(dir, relDir)).toSeq
       .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-      .map(s => (s"$relDir/${s.getPath.getName}", footerOf(spark, s.getPath).rows))
+      .map(s => (s"$relDir/${s.getPath.getName}", footerOf(conf, s.getPath).rows))
       .partition(_._2 > 0)
     empty.foreach { case (f, _) => fs.delete(new Path(dir, f), false) }
     kept
@@ -1219,8 +1223,9 @@ object TableLog {
       // (plain signed INT32/INT64, complete statistics); the scan job
       // remains the exact fallback for every other type.
       def fromFooters(): Option[Map[String, Map[String, (Long, Long)]]] = {
+        val conf = spark.sessionState.newHadoopConf()
         val perFile = fresh.map { f =>
-          val meta = footerOf(spark, new Path(dir, f))
+          val meta = footerOf(conf, new Path(dir, f))
           val perCol = physCols.flatMap { c =>
             meta.intStats.get(c) match {
               case None => return None // not provable -> scan fallback

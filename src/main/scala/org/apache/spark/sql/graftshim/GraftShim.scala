@@ -3,8 +3,8 @@ package org.apache.spark.sql.graftshim
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** The one `private[sql]` doorway graft's custom logical operators need:
-  * turning a hand-built [[LogicalPlan]] into a user-facing [[DataFrame]].
+/** The `private[sql]` doorways graft needs. Its custom logical operators
+  * turn a hand-built [[LogicalPlan]] into a user-facing [[DataFrame]].
   *
   * Spark has no public constructor for "DataFrame over my own plan node" —
   * every third-party plan-level extension (Delta, Iceberg, the spark
@@ -12,9 +12,15 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * package to reach `classic.Dataset.ofRows`. Everything else in
   * graft.plans uses public APIs (SparkStrategy, SparkPlan,
   * experimental.extraStrategies).
+  *
+  * `Session.install` sets its filesystem keys on the shared state's Hadoop
+  * conf, the one every `newHadoopConf()` copy starts from.
   */
 object GraftShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  def sharedHadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.hadoopConf
 }
